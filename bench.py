@@ -78,6 +78,9 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict, dict, dict, int]:
     name→[samples], total_tokens)."""
     from pyspark.sql import functions as F
 
+    from presto_bloomfilter_spark import (
+        BloomFilter, CountMinSketch, CountSketch, DDSketch, FrequentDirections, HyperLogLog,
+        KLLSketch, MomentsSketch, SplitBlockBloomFilter)
     from presto_bloomfilter_spark.operators import aggregate as agg
     from presto_bloomfilter_spark.plans import queries as Q
     from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet, load_tokens
@@ -128,32 +131,34 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict, dict, dict, int]:
             n_tasks=CPUS)),
         # individual builds through the DataFrame (JVM-scan) path
         ("bloom_build_tokens", lambda: agg.aggregate_sketch(
-            tokens, agg.bloom_over_tokens("tokens", 1_000_000, 0.01), target_partials=CPUS)),
+            tokens, agg.sketch_spec(BloomFilter, "tokens", "tokens", 1_000_000, 0.01), target_partials=CPUS)),
         # split-block sibling of the two bloom entries: same dataflow,
         # blocked bitset (one-cache-line probes; functions/sbbf.py)
         ("sbbf_build_tokens", lambda: agg.aggregate_sketch(
-            tokens, agg.sbbf_over_tokens("tokens", 1_000_000, 0.01), target_partials=CPUS)),
+            tokens, agg.sketch_spec(SplitBlockBloomFilter, "tokens", "tokens", 1_000_000, 0.01),
+            target_partials=CPUS)),
         ("hll_tokens_by_source", lambda: agg.grouped_sketch(
-            tokens, "source", agg.hll_over_tokens("tokens")).collect()),
+            tokens, "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens")).collect()),
         ("hll_by_source_fused", lambda: agg.grouped_sketch_from_parquet(
-            spark, tokens_path, "source", agg.hll_over_tokens("tokens"), n_tasks=CPUS).collect()),
+            spark, tokens_path, "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens"),
+            n_tasks=CPUS).collect()),
         ("cms_build_tokens", lambda: agg.aggregate_sketch(
-            tokens, agg.cms_over_tokens("tokens", eps=1e-4), target_partials=CPUS)),
+            tokens, agg.sketch_spec(CountMinSketch, "tokens", "tokens", eps=1e-4), target_partials=CPUS)),
         ("kll_ntok", lambda: agg.aggregate_sketch(
-            tokens, agg.kll_over_column("n_tok"), target_partials=CPUS)),
+            tokens, agg.sketch_spec(KLLSketch, "n_tok", "floats"), target_partials=CPUS)),
         ("ddsketch_ntok", lambda: agg.aggregate_sketch(
-            tokens, agg.ddsketch_over_column("n_tok"), target_partials=CPUS)),
+            tokens, agg.sketch_spec(DDSketch, "n_tok", "floats"), target_partials=CPUS)),
         ("countsketch_doc_ids", lambda: agg.aggregate_sketch(
-            tokens.select("doc_id"), agg.countsketch_over_strings("doc_id"),
+            tokens.select("doc_id"), agg.sketch_spec(CountSketch, "doc_id", "strings"),
             target_partials=CPUS)),
         ("fd_embedding_gram", lambda: agg.aggregate_sketch(
             spark.read.parquet(f"{sf_dir}/embeddings.parquet")
                  .select("embedding"),
-            agg.fd_over_vectors("embedding", 64, ell=32),
+            agg.sketch_spec(FrequentDirections, "embedding", "vectors", 64, ell=32),
             target_partials=CPUS)),
         ("moments_ntok_by_source", lambda: agg.grouped_sketch(
             tokens.selectExpr("source", "CAST(n_tok AS DOUBLE) AS v"),
-            "source", agg.moments_over_column("v", 0.0, 1024.0)).collect()),
+            "source", agg.sketch_spec(MomentsSketch, "v", "floats", 0.0, 1024.0)).collect()),
         # map-only concat-and-chunk packing of the whole corpus into
         # 2048-token training sequences (one pass, no shuffle)
         ("pack_sequences", lambda: packing.pack_concat_chunks(

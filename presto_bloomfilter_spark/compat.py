@@ -49,7 +49,7 @@ def bloom_filter(
     (grouped).  Null/'' elements are silently ignored
     (BloomFilter.java:161-167).
     """
-    spec = agg.bloom_over_strings(col, expected_insertions, fpp)
+    spec = agg.sketch_spec(BloomFilter, col, "strings", expected_insertions, fpp)
     if group_by is None:
         return agg.aggregate_sketch(df, spec, target_partials=target_partials)
     return agg.grouped_sketch(df, group_by, spec)

@@ -13,7 +13,8 @@ without rebuilding the filter over the surviving 10^12 keys.
 Distributed-first algebra (the part the 2000 paper didn't need):
 counters form a commutative monoid under saturating element-wise
 ADDITION, so a CBF builds through the exact same partial/tree-merge
-dataflow as every other sketch here (``cbf_over_*`` specs).  Deletion
+dataflow as every other sketch here (``sketch_spec(CountingBloomFilter,
+...)``).  Deletion
 is the same job run backwards: aggregate a SECOND filter over the
 delete-key DataFrame with identical geometry and ``subtract`` it —
 one distributed build, one driver-side vector op, no per-key driver

@@ -2,15 +2,26 @@
 
 Fourth quantile member of the sketch family (KLL: worst-case rank error;
 t-digest: tail rank accuracy; moments: ~120 B grouped state).  DDSketch's
-contract is different and uniquely useful for token statistics: every
-quantile estimate of a positive value is within RELATIVE error ``alpha``
-of an exact quantile — ``|est - x_q| <= alpha * x_q`` — regardless of the
-distribution, and (unlike KLL/t-digest, whose byte output depends on
-merge order) its merge is LOSSLESS bucket-count addition: associative,
-commutative, and byte-identical under any merge tree.  That makes it the
-one quantile sketch here whose estimates are provably invariant across
-shuffle nondeterminism, task retries, and fan-in shape — the property
-the north rule's "merge associativity" clause is really about.
+contract is different and uniquely useful for token statistics: while
+no store exceeds ``max_bins`` buckets, every quantile estimate of a
+positive value is within RELATIVE error ``alpha`` of an exact quantile —
+``|est - x_q| <= alpha * x_q`` — regardless of the distribution, and
+(unlike KLL/t-digest, whose byte output depends on merge order) its
+merge is LOSSLESS bucket-count addition: associative, commutative, and
+byte-identical under any merge tree.  That makes it the one quantile
+sketch here whose estimates are provably invariant across shuffle
+nondeterminism, task retries, and fan-in shape — the property the north
+rule's "merge associativity" clause is really about.
+
+Where that stops: once a store holds more than ``max_bins`` buckets,
+its lowest-magnitude buckets fold into one (``collapsed`` turns True).
+The merge is then no longer lossless: a quantile whose exact value lies
+in or below the fold bucket is reported as that bucket's value and
+loses the ``alpha`` bound; quantiles above it keep the bound.  Byte
+identity survives the fold — the collapsed store is the ``max_bins``
+highest bucket indices of everything inserted, with all lower counts
+added to the lowest kept one, which depends on the inserted values
+alone, not on the merge tree or retry order.
 
 Log-spaced buckets: value x > 0 maps to index ceil(log_gamma(x)) with
 gamma = (1+alpha)/(1-alpha); bucket i estimates 2·gamma^i/(gamma+1)

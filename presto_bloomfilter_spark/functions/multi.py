@@ -83,5 +83,12 @@ class MultiSketch:
             off += ln
         return cls(parts)
 
+    @classmethod
+    def from_bytes(cls, buf: bytes) -> "MultiSketch":
+        kind, params, payload = ser.decode(buf)
+        if kind != ser.KIND_MULTI:
+            raise ValueError("not a multi-sketch blob")
+        return cls._from_parts(params, payload)
+
     def __repr__(self) -> str:
         return f"MultiSketch({', '.join(type(p).__name__ for p in self.parts)})"

@@ -21,7 +21,7 @@ directly:
 Same vectorized batch interface (add_ints / add_strings over numpy,
 no per-row Python) and PBFS serialization (kind 7) as the siblings, so
 the aggregate/grouped/tree-merge dataflow works unchanged via
-``theta_over_tokens`` / ``theta_over_strings`` specs in
+``sketch_spec(ThetaSketch, col, "tokens")`` (or ``"strings"``) in
 operators/aggregate.py.
 """
 

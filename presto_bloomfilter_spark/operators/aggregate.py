@@ -30,24 +30,30 @@ final merge work.  applyInPandas materializes each group in one worker
 from __future__ import annotations
 
 import contextlib
+import copy
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
-from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
+from presto_bloomfilter_spark.functions.cbf import CountingBloomFilter
 from presto_bloomfilter_spark.functions.cms import CountMinSketch
+from presto_bloomfilter_spark.functions.countsketch import CountSketch
+from presto_bloomfilter_spark.functions.ddsketch import DDSketch
+from presto_bloomfilter_spark.functions.fd import ExactGram, FrequentDirections
 from presto_bloomfilter_spark.functions.hll import HyperLogLog
 from presto_bloomfilter_spark.functions.kll import KLLSketch
+from presto_bloomfilter_spark.functions.mg import MisraGries
+from presto_bloomfilter_spark.functions.moments import MomentsSketch
 from presto_bloomfilter_spark.functions.multi import MultiSketch
-from presto_bloomfilter_spark.functions.cbf import CountingBloomFilter
 from presto_bloomfilter_spark.functions.sbbf import SplitBlockBloomFilter
 from presto_bloomfilter_spark.functions.tdigest import TDigest
+from presto_bloomfilter_spark.functions.theta import ThetaSketch
 from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
 
 DEFAULT_FAN_IN = 16
@@ -55,7 +61,7 @@ DEFAULT_FAN_IN = 16
 _ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def tune_arrow_batches(df_or_spark) -> None:
+def tune_arrow_batches(df_or_spark) -> bool:
     """Pin JVM→Python Arrow transfer batches to a cache-resident size.
 
     Rows here carry wide ``array<int>`` token columns (~180 elements),
@@ -71,14 +77,17 @@ def tune_arrow_batches(df_or_spark) -> None:
     so the conf must still hold when the action finally runs.  Eager
     operators (``aggregate_sketch``) instead use the scoped
     ``_tuned_arrow_batches`` context manager, which restores the
-    previous value once their job completes.
+    previous value once their job completes.  Returns whether it
+    changed the conf.
     """
     spark = getattr(df_or_spark, "sparkSession", df_or_spark)
     try:
         if spark.conf.get(_ARROW_BATCH_KEY, "10000") == "10000":
             spark.conf.set(_ARROW_BATCH_KEY, "4096")
+            return True
     except Exception:  # pragma: no cover — conf API unavailable
         pass
+    return False
 
 
 @contextlib.contextmanager
@@ -87,19 +96,13 @@ def _tuned_arrow_batches(df_or_spark):
     batch size for the duration of an eager job, then restore, so
     unrelated pandas-UDF workloads in the same session keep the default."""
     spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    prev = None
-    try:
-        if spark.conf.get(_ARROW_BATCH_KEY, "10000") == "10000":
-            spark.conf.set(_ARROW_BATCH_KEY, "4096")
-            prev = "10000"
-    except Exception:  # pragma: no cover — conf API unavailable
-        pass
+    changed = tune_arrow_batches(spark)
     try:
         yield
     finally:
-        if prev is not None:
+        if changed:
             try:
-                spark.conf.set(_ARROW_BATCH_KEY, prev)
+                spark.conf.set(_ARROW_BATCH_KEY, "10000")
             except Exception:  # pragma: no cover
                 pass
 
@@ -126,16 +129,12 @@ class TokenDedupAccumulator:
 
     RANGE_CAP = 1 << 22  # 4M distinct ids → 32MB counts array, max
 
-    def __init__(self, sketch, weighted: bool | None = None):
+    def __init__(self, sketch, weighted: bool):
         self.sketch = sketch
         self.counts: np.ndarray | None = None
         self.base = 0
         self.direct = False
-        self.weighted = (
-            isinstance(sketch, (CountMinSketch, MultiSketch))
-            if weighted is None
-            else weighted
-        )
+        self.weighted = weighted
 
     def add_flat(self, flat: np.ndarray) -> None:
         if flat.size == 0:
@@ -220,8 +219,6 @@ def _col_flat_tokens(batch: pa.RecordBatch, name: str) -> np.ndarray:
     pyarrow ListArray.flatten() (SURVEY.md §2.3: the vectorized form of
     F.explode for sketch input)."""
     col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
     flat = col.flatten()
     return flat.to_numpy(zero_copy_only=False)
 
@@ -238,147 +235,15 @@ def _col_ints(batch: pa.RecordBatch, name: str) -> np.ndarray:
     int-hash guard in hashing.py would then reject it loudly, but the
     insert semantics should simply ignore nulls like add_strings does."""
     col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
     if col.null_count:
         col = col.drop_null()
     return col.to_numpy(zero_copy_only=False)
-
-
-# ---- prebuilt specs ----------------------------------------------------------
-
-
-def bloom_over_strings(col: str, n: int = BloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                       p: float = BloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """bloom_filter(varchar[, n[, p]]) parity (reference
-    BloomFilterAggregation.java:31-62)."""
-    return SketchSpec(
-        (col,),
-        lambda: BloomFilter(n, p),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def bloom_over_tokens(col: str = "tokens", n: int = BloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                      p: float = BloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(BloomFilter(n, p)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def bloom_over_ints(col: str, n: int = BloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                    p: float = BloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """bloom_filter over a scalar integer column — no string casts, int
-    hashing stays pure numpy."""
-    return SketchSpec(
-        (col,),
-        lambda: BloomFilter(n, p),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def sbbf_over_strings(col: str, n: int = SplitBlockBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                      p: float = SplitBlockBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """Split-block (Parquet-style blocked) bloom over a string column —
-    same build dataflow as bloom_over_strings, one-cache-line probes."""
-    return SketchSpec(
-        (col,),
-        lambda: SplitBlockBloomFilter(n, p),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def sbbf_over_tokens(col: str = "tokens", n: int = SplitBlockBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                     p: float = SplitBlockBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(SplitBlockBloomFilter(n, p)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def sbbf_over_ints(col: str, n: int = SplitBlockBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                   p: float = SplitBlockBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: SplitBlockBloomFilter(n, p),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def cbf_over_strings(col: str, n: int = CountingBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                     p: float = CountingBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """Counting bloom over a string column — merge is saturating
-    counter ADDITION (multiset), so the same partial/tree dataflow
-    builds both the insert filter and the delete filter that
-    ``CountingBloomFilter.subtract`` consumes."""
-    return SketchSpec(
-        (col,),
-        lambda: CountingBloomFilter(n, p),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def cbf_over_ints(col: str, n: int = CountingBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                  p: float = CountingBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: CountingBloomFilter(n, p),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def hll_over_strings(col: str, precision: int = HyperLogLog.DEFAULT_PRECISION) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: HyperLogLog(precision),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def hll_over_tokens(col: str = "tokens", precision: int = HyperLogLog.DEFAULT_PRECISION) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(HyperLogLog(precision)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def cms_over_tokens(col: str = "tokens", eps: float = 1e-4, delta: float = 0.01) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(CountMinSketch(eps, delta)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def cms_over_strings(col: str, eps: float = 1e-4, delta: float = 0.01) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: CountMinSketch(eps, delta),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def cms_over_ints(col: str, eps: float = 1e-4, delta: float = 0.01) -> SketchSpec:
-    """count-min over a scalar integer column — no string casts, int
-    hashing stays pure numpy (the join-key shape for
-    ``CountMinSketch.inner_product`` join-size estimation)."""
-    return SketchSpec(
-        (col,),
-        lambda: CountMinSketch(eps, delta),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
 
 
 def _col_matrix(batch: pa.RecordBatch, name: str, d: int) -> "np.ndarray":
     """array<float> column → (m, d) float64 matrix, zero-copy flatten +
     reshape (the vectorized row-batch form FD/Gram accumulators eat)."""
     col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
     flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     if flat.size != len(col) * d:
         raise ValueError(
@@ -387,61 +252,81 @@ def _col_matrix(batch: pa.RecordBatch, name: str, d: int) -> "np.ndarray":
     return flat.reshape(-1, d)
 
 
-def fd_over_vectors(col: str, d: int, ell: int = 32) -> SketchSpec:
-    """Frequent-Directions matrix sketch (functions/fd.py) over an
-    array<float> embedding column: ℓ×d state per partial, one SVD per
-    Arrow batch, tree-merged with the GLPW mergeability guarantee."""
-    from presto_bloomfilter_spark.functions.fd import FrequentDirections
+# ---- sketch specs ------------------------------------------------------------
 
-    return SketchSpec(
-        (col,),
-        lambda: FrequentDirections(d, ell),
-        lambda sk, b: sk.add(_col_matrix(b, col, d)),
-    )
+# input -> (Arrow extractor, the sketch method it feeds)
+_INPUTS = {
+    "strings": (_col_strings, "add_strings"),
+    "ints": (_col_ints, "add_ints"),
+    "tokens": (_col_flat_tokens, "add_ints"),
+    "floats": (_col_floats, "add"),
+    "vectors": (_col_matrix, "add"),
+}
 
-
-def gram_over_vectors(col: str, d: int) -> SketchSpec:
-    """Exact distributed Gram/covariance accumulator (AᵀA, lossless
-    vector-add merge) over an array<float> column."""
-    from presto_bloomfilter_spark.functions.fd import ExactGram
-
-    return SketchSpec(
-        (col,),
-        lambda: ExactGram(d),
-        lambda sk, b: sk.add(_col_matrix(b, col, d)),
-    )
-
-
-def countsketch_over_strings(col: str, width: int = 4096, depth: int = 7) -> SketchSpec:
-    """Count-Sketch (signed AMS, functions/countsketch.py) over a string
-    column — the UNBIASED frequency/F2/join-size sibling of
-    cms_over_strings with a lossless elementwise-add merge."""
-    from presto_bloomfilter_spark.functions.countsketch import CountSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: CountSketch(width, depth),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
+# Per kind: the inputs it builds from, and how TokenDedupAccumulator may
+# collapse repeated token ids before insert.  "idempotent" kinds take each
+# unique id once (re-inserting changes nothing); "counts" kinds take each
+# unique id with its count; None inserts every token occurrence directly
+# (Misra-Gries counts each insert and takes no ``counts`` argument).
+_KINDS: dict[type, tuple[tuple[str, ...], str | None]] = {
+    BloomFilter: (("strings", "ints", "tokens"), "idempotent"),
+    SplitBlockBloomFilter: (("strings", "ints", "tokens"), "idempotent"),
+    HyperLogLog: (("strings", "tokens"), "idempotent"),
+    ThetaSketch: (("strings", "tokens"), "idempotent"),
+    CountMinSketch: (("strings", "ints", "tokens"), "counts"),
+    MultiSketch: (("tokens",), "counts"),
+    CountingBloomFilter: (("strings", "ints"), None),
+    CountSketch: (("strings", "ints"), None),
+    MisraGries: (("strings", "tokens"), None),
+    KLLSketch: (("floats",), None),
+    TDigest: (("floats",), None),
+    MomentsSketch: (("floats",), None),
+    DDSketch: (("floats",), None),
+    FrequentDirections: (("vectors",), None),
+    ExactGram: (("vectors",), None),
+}
 
 
-def countsketch_over_ints(col: str, width: int = 4096, depth: int = 7) -> SketchSpec:
-    """Count-Sketch over a scalar integer column (join keys, token ids)."""
-    from presto_bloomfilter_spark.functions.countsketch import CountSketch
+def sketch_spec(kind: type, col: str, input: str, *args, **kwargs) -> SketchSpec:
+    """Spec that builds one ``kind`` sketch from column ``col``.
 
-    return SketchSpec(
-        (col,),
-        lambda: CountSketch(width, depth),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
+    ``input`` says how the column is read: ``strings`` (a string
+    column), ``ints`` (an integer column, NULLs dropped), ``tokens``
+    (every element of an array<int> column), ``floats`` (a numeric
+    column) or ``vectors`` (array<float> rows of the sketch's dimension
+    ``d``).  ``args``/``kwargs`` go to ``kind``'s constructor, so the
+    defaults are the class's own: ``sketch_spec(BloomFilter, "k",
+    "strings", n, p)`` is the reference's bloom_filter(varchar[, n[, p]])
+    aggregation (BloomFilterAggregation.java:31-62).  Raises ValueError
+    when ``kind`` cannot be built from ``input``.
+    """
+    inputs, dedup = _KINDS.get(kind, ((), None))
+    if input not in inputs:
+        raise ValueError(
+            f"cannot build {getattr(kind, '__name__', kind)} from {input!r} input"
+            f" (accepts: {', '.join(inputs) or 'nothing'})")
+    extract, insert = _INPUTS[input]
+
+    def factory():
+        # constructor args may be sketches (MultiSketch parts): copy them
+        # so every partial starts from its own empty state
+        return kind(*copy.deepcopy(args), **kwargs)
+
+    if input == "tokens" and dedup:
+        weighted = dedup == "counts"
+        return SketchSpec((col,), lambda: TokenDedupAccumulator(factory(), weighted),
+                          lambda sk, b: sk.add_flat(extract(b, col)))
+    if input == "vectors":
+        return SketchSpec((col,), factory, lambda sk, b: sk.add(extract(b, col, sk.d)))
+    return SketchSpec((col,), factory, lambda sk, b: getattr(sk, insert)(extract(b, col)))
 
 
 def token_family_over_tokens(
     col: str = "tokens",
     bloom_n: int = 1_000_000,
     bloom_p: float = BloomFilter.DEFAULT_FPP,
-    cms_eps: float = 1e-4,
-    cms_delta: float = 0.01,
+    cms_eps: float = CountMinSketch.DEFAULT_EPS,
+    cms_delta: float = CountMinSketch.DEFAULT_DELTA,
     hll_precision: int = HyperLogLog.DEFAULT_PRECISION,
 ) -> SketchSpec:
     """Bloom + CMS + HLL over one tokens scan — the fused sketch family.
@@ -450,129 +335,23 @@ def token_family_over_tokens(
     building membership, frequency, and cardinality sketches in a single
     pass costs ~⅓ of three separate jobs; all three flush from the same
     dedup counts (TokenDedupAccumulator), so the kernels run once per
-    unique id per partition, not once per token.
+    unique id per partition, not once per token.  Kept as a name only
+    because the benchmark (sketchbench/workloads.py) imports it.
     """
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(
-            MultiSketch(
-                [
-                    BloomFilter(bloom_n, bloom_p),
-                    CountMinSketch(cms_eps, cms_delta),
-                    HyperLogLog(hll_precision),
-                ]
-            )
-        ),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
+    return sketch_spec(MultiSketch, col, "tokens", [
+        BloomFilter(bloom_n, bloom_p), CountMinSketch(cms_eps, cms_delta), HyperLogLog(hll_precision)])
 
 
-def theta_over_strings(col: str, k: int | None = None) -> SketchSpec:
-    """KMV/theta distinct sketch over a string column — the sibling to
-    use when SET OPERATIONS (intersection/difference/Jaccard) on the
-    distinct sets must stay accurate (functions/theta.py)."""
-    from presto_bloomfilter_spark.functions.theta import ThetaSketch
-
-    kk = k or ThetaSketch.DEFAULT_K
-    return SketchSpec(
-        (col,),
-        lambda: ThetaSketch(kk),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
+def kll_over_column(col: str, *args, **kwargs) -> SketchSpec:
+    """``sketch_spec(KLLSketch, col, "floats", ...)``, kept as a name only
+    because the benchmark (sketchbench/workloads.py) imports it."""
+    return sketch_spec(KLLSketch, col, "floats", *args, **kwargs)
 
 
-def theta_over_tokens(col: str = "tokens", k: int | None = None) -> SketchSpec:
-    from presto_bloomfilter_spark.functions.theta import ThetaSketch
-
-    kk = k or ThetaSketch.DEFAULT_K
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(ThetaSketch(kk), weighted=False),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def kll_over_column(col: str, k: int = KLLSketch.DEFAULT_K) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: KLLSketch(k),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def tdigest_over_column(col: str, compression: int = TDigest.DEFAULT_COMPRESSION) -> SketchSpec:
-    """t-digest quantiles — tail-accurate sibling of kll_over_column
-    (north_rule lists both); same build/merge dataflow."""
-    return SketchSpec(
-        (col,),
-        lambda: TDigest(compression),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def moments_over_column(col: str, lo: float, hi: float,
-                        k: int = 12, clamp: bool = False,
-                        log: bool = False) -> SketchSpec:
-    """Moments-sketch quantiles (Gan et al. VLDB 2018) — the
-    HIGH-CARDINALITY grouped sibling of kll/tdigest_over_column:
-    ~(k+3)·8 bytes of state per key and a pure vector-add merge, so a
-    per-key quantile table over millions of keys stays tiny where a
-    KLL per key would not.  ``(lo, hi)`` is the declared value range
-    (geometry, like bloom's n/p); ``log=True`` accumulates ln-moments
-    for long-tailed data.  No worst-case rank bound — that is the
-    published trade; use KLL when you need the guarantee."""
-    from presto_bloomfilter_spark.functions.moments import MomentsSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: MomentsSketch(lo, hi, k, clamp=clamp, log=log),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def ddsketch_over_column(col: str, alpha: float = 0.01,
-                         max_bins: int = 2048) -> SketchSpec:
-    """DDSketch quantiles (Masson et al. VLDB 2019) — the RELATIVE-error
-    sibling of kll/tdigest_over_column: every estimate of a positive
-    quantile is within ``alpha`` relative error, and the merge is
-    LOSSLESS bucket-count addition, so estimates are byte-identical
-    under any merge tree / task-retry order — the strongest
-    merge-associativity member of the quantile family."""
-    from presto_bloomfilter_spark.functions.ddsketch import DDSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: DDSketch(alpha, max_bins),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def mg_over_strings(col: str, k: int = 4096) -> SketchSpec:
-    """Misra-Gries frequent-items summary over a string column
-    (functions/mg.py) — the DETERMINISTIC heavy-hitter sibling of
-    cms_over_strings: at most k exact (item, count) pairs, undercount
-    <= n/(k+1), PODS'12 mergeable trim.  Every item with true count
-    above n/(k+1) is guaranteed present, which is the candidate-
-    generation contract for two-phase exact top-k."""
-    from presto_bloomfilter_spark.functions.mg import MisraGries
-
-    return SketchSpec(
-        (col,),
-        lambda: MisraGries(k),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def mg_over_tokens(col: str = "tokens", k: int = 4096) -> SketchSpec:
-    """Misra-Gries over a flattened array<int> token column — all
-    occurrences, like cms_over_tokens."""
-    from presto_bloomfilter_spark.functions.mg import MisraGries
-
-    return SketchSpec(
-        (col,),
-        lambda: MisraGries(k),
-        lambda sk, b: sk.add_ints(_col_flat_tokens(b, col)),
-    )
+def hll_over_strings(col: str, *args, **kwargs) -> SketchSpec:
+    """``sketch_spec(HyperLogLog, col, "strings", ...)``, kept as a name
+    only because the benchmark (sketchbench/workloads.py) imports it."""
+    return sketch_spec(HyperLogLog, col, "strings", *args, **kwargs)
 
 
 # ---- ungrouped aggregation (two-level tree merge) ----------------------------
@@ -615,25 +394,27 @@ def _partial_build(spec: SketchSpec, metrics: BuildMetrics | None = None):
     return fn
 
 
-def _make_merge_blobs(metrics: BuildMetrics | None = None):
+def _fold(sketches, metrics: BuildMetrics | None = None):
+    """Merge sketches left to right; None when there are none."""
+    out = None
+    for sk in sketches:
+        if out is None:
+            out = sk
+            continue
+        out = out.merge(sk)
+        if metrics is not None:
+            metrics._merges.add(1)
+    return out
+
+
+def _merge_blobs(metrics: BuildMetrics | None = None):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = None
-        for b in batches:
-            for buf in b.column(0):
-                other = sketch_from_bytes(buf.as_py())
-                if sk is None:
-                    sk = other
-                else:
-                    sk = sk.merge(other)
-                    if metrics is not None:
-                        metrics._merges.add(1)
+        sk = _fold((sketch_from_bytes(buf.as_py()) for b in batches for buf in b.column(0)),
+                   metrics)
         if sk is not None:
             yield pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
 
     return fn
-
-
-_merge_blobs = _make_merge_blobs()
 
 
 def aggregate_sketch(
@@ -655,21 +436,29 @@ def aggregate_sketch(
     DAG driver-side, ~100s of ms per call).  Pass ``target_partials=0``
     to keep the input partitioning as-is.
     """
+    with _tuned_arrow_batches(df):
+        return _coalesced_tree_merge(df.select(*spec.columns), _partial_build(spec, metrics),
+                                     target_partials, fan_in, spec, metrics)
+
+
+def _coalesced_tree_merge(pruned: DataFrame, body, target_partials: int | None, fan_in: int,
+                          spec: SketchSpec | None = None, metrics: BuildMetrics | None = None):
+    """Coalesce ``pruned`` to ``target_partials`` tasks (default: the
+    session's defaultParallelism), run the mapInArrow ``body`` that
+    emits one blob per task, and tree-merge the blobs to one sketch."""
     if target_partials is None:
-        target_partials = df.sparkSession.sparkContext.defaultParallelism
-    pruned = df.select(*spec.columns)
+        target_partials = pruned.sparkSession.sparkContext.defaultParallelism
     if target_partials:
         pruned = pruned.coalesce(target_partials)
-    with _tuned_arrow_batches(df):
-        partials = pruned.mapInArrow(_partial_build(spec, metrics), "sketch binary")
-        # coalesce never INCREASES partition count, so n_parts may
-        # overstate the real partial count for narrow inputs; the cost
-        # is at most log_fan_in(target) extra repartition rounds over a
-        # handful of sketch blobs (milliseconds) — cheaper than the
-        # driver-side DAG build getNumPartitions() would need to know
-        # the true count
-        n_parts = target_partials or pruned.rdd.getNumPartitions()
-        return _tree_merge_collect(partials, n_parts, fan_in, spec, metrics)
+    partials = pruned.mapInArrow(body, "sketch binary")
+    # coalesce never INCREASES partition count, so n_parts may
+    # overstate the real partial count for narrow inputs; the cost
+    # is at most log_fan_in(target) extra repartition rounds over a
+    # handful of sketch blobs (milliseconds) — cheaper than the
+    # driver-side DAG build getNumPartitions() would need to know
+    # the true count
+    n_parts = target_partials or pruned.rdd.getNumPartitions()
+    return _tree_merge_collect(partials, n_parts, fan_in, spec, metrics)
 
 
 def _tree_merge_collect(
@@ -687,7 +476,7 @@ def _tree_merge_collect(
     fan_in blobs (north_rule: treeAggregate-style merges, no driver
     hotspot).
     """
-    merge_fn = _make_merge_blobs(metrics) if metrics is not None else _merge_blobs
+    merge_fn = _merge_blobs(metrics)
     while n_parts > fan_in:
         n_parts = -(-n_parts // fan_in)
         partials = partials.repartition(n_parts).mapInArrow(merge_fn, "sketch binary")
@@ -707,12 +496,7 @@ def _tree_merge_collect(
             sketches = list(ex.map(sketch_from_bytes, blobs))
     else:
         sketches = [sketch_from_bytes(blobs[0])]
-    out = sketches[0]
-    for x in sketches[1:]:
-        out = out.merge(x)
-        if metrics is not None:
-            metrics._merges.add(1)
-    return out
+    return _fold(sketches, metrics)
 
 
 def aggregate_sketch_from_parquet(
@@ -742,34 +526,35 @@ def aggregate_sketch_from_parquet(
     splits parquet scans — we only relocate the decode to the process
     that consumes the bytes.
     """
+    partials, n_tasks = _parquet_shards(
+        spark, path, list(spec.columns), n_tasks, _partial_build(spec, metrics), "sketch binary")
+    return _tree_merge_collect(partials, n_tasks, fan_in, spec, metrics)
+
+
+def _parquet_shards(spark, path: str, cols: list[str], n_tasks: int | None,
+                    body, schema: str) -> tuple[DataFrame, int]:
+    """One Spark task per shard of row groups (strided, so file-position
+    skew balances out); each task reads its own row groups with pyarrow
+    and feeds them to the mapInArrow ``body``.  Returns the output
+    DataFrame and the shard count."""
     import pyarrow.parquet as pq
 
-    meta = pq.ParquetFile(path).metadata
-    n_rg = meta.num_row_groups
+    n_rg = pq.ParquetFile(path).metadata.num_row_groups
     if n_tasks is None:
         n_tasks = spark.sparkContext.defaultParallelism
     n_tasks = max(1, min(n_tasks, n_rg))
-    cols = list(spec.columns)
 
     def build_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = spec.factory()
-        pf = pq.ParquetFile(path)
-        for b in batches:
-            for sid in b.column(0).to_pylist():
-                for rg in range(sid, n_rg, n_tasks):
-                    tbl = pf.read_row_group(rg, columns=cols)
-                    for rb in tbl.to_batches():
-                        spec.update(sk, rb)
-                        if metrics is not None:
-                            metrics._rows.add(rb.num_rows)
-                            metrics._batches.add(1)
-        if metrics is not None:
-            metrics._partials.add(1)
-        yield pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+        def shard_batches() -> Iterator[pa.RecordBatch]:
+            pf = pq.ParquetFile(path)
+            for b in batches:
+                for sid in b.column(0).to_pylist():
+                    for rg in range(sid, n_rg, n_tasks):
+                        yield from pf.read_row_group(rg, columns=cols).to_batches()
 
-    shards = spark.range(0, n_tasks, 1, n_tasks)
-    partials = shards.mapInArrow(build_shard, "sketch binary")
-    return _tree_merge_collect(partials, n_tasks, fan_in, spec, metrics)
+        yield from body(shard_batches())
+
+    return spark.range(0, n_tasks, 1, n_tasks).mapInArrow(build_shard, schema), n_tasks
 
 
 def grouped_sketch_from_parquet(
@@ -791,7 +576,6 @@ def grouped_sketch_from_parquet(
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
-    meta = pf.metadata
     # key labels come from Python str() in the fused kernel; str() and
     # Spark's cast-to-string agree for string/int keys but NOT for
     # double ('1e-07' vs '1.0E-7') or boolean ('True' vs 'true') — so
@@ -805,25 +589,9 @@ def grouped_sketch_from_parquet(
             f"str() labels would diverge from grouped_sketch's JVM "
             f"cast-to-string; pre-cast the key to string (or use "
             f"grouped_sketch)")
-    n_rg = meta.num_row_groups
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    n_tasks = max(1, min(n_tasks, n_rg))
-    cols = list(dict.fromkeys([key, *spec.columns]))
-    grouped_body = _grouped_partial_build(spec, key)
-
-    def build_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def shard_batches() -> Iterator[pa.RecordBatch]:
-            pf = pq.ParquetFile(path)
-            for b in batches:
-                for sid in b.column(0).to_pylist():
-                    for rg in range(sid, n_rg, n_tasks):
-                        yield from pf.read_row_group(rg, columns=cols).to_batches()
-
-        yield from grouped_body(shard_batches())
-
-    shards = spark.range(0, n_tasks, 1, n_tasks)
-    partials = shards.mapInArrow(build_shard, f"{key} string, sketch binary")
+    partials, _ = _parquet_shards(
+        spark, path, list(dict.fromkeys([key, *spec.columns])), n_tasks,
+        _grouped_partial_build(spec, key), f"{key} string, sketch binary")
     return grouped_merge_sketch_column(partials, key)
 
 
@@ -835,18 +603,11 @@ def merge_sketch_column(df: DataFrame, col: str = "sketch", fan_in: int = DEFAUL
 
     Same tree-merge dataflow as aggregate_sketch: partial count pinned
     to defaultParallelism by default (coalesce, no shuffle, no
-    driver-side getNumPartitions), bounded fan-in above it.
+    driver-side getNumPartitions), bounded fan-in above it.  Raises
+    ValueError on empty input.
     """
-    if target_partials is None:
-        target_partials = df.sparkSession.sparkContext.defaultParallelism
-    pruned = df.select(F.col(col).alias("sketch"))
-    if target_partials:
-        pruned = pruned.coalesce(target_partials)
-    partials = pruned.mapInArrow(_merge_blobs, "sketch binary")
-    n_parts = target_partials or pruned.rdd.getNumPartitions()
-    # shared tree-merge tail (bounded fan-in, threaded blob decode);
-    # raises the same ValueError on empty input
-    return _tree_merge_collect(partials, n_parts, fan_in)
+    return _coalesced_tree_merge(df.select(F.col(col).alias("sketch")), _merge_blobs(),
+                                 target_partials, fan_in)
 
 
 # ---- heavy hitters (two-phase top-k) ------------------------------------------
@@ -937,14 +698,7 @@ def top_k_tokens(
         F.broadcast(cand_ids), "token"
     )
     exact = exploded.groupBy("token").agg(F.count("*").alias("cnt"))
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("cnt"), F.asc("token"))
-    result = (
-        exact.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(F.col("token").cast("int").alias("token"), "cnt")
-    )
+    result = _top_k_rows(exact, "token", k).select(F.col("token").cast("int").alias("token"), "cnt")
     if not certify:
         return result
     try:
@@ -1006,10 +760,8 @@ def mg_top_k(
 
     Output: (item string, cnt long).
     """
-    from presto_bloomfilter_spark.functions.mg import MisraGries  # noqa: F401
-
     spark = df.sparkSession
-    summary = aggregate_sketch(df.select(col), mg_over_strings(col, k_counters))
+    summary = aggregate_sketch(df.select(col), sketch_spec(MisraGries, col, "strings", k_counters))
     bound = summary.error_bound()
     cands = [item for item, _ in summary.topk(k_counters)]
     if not cands:
@@ -1021,14 +773,7 @@ def mg_top_k(
         .groupBy("item")
         .agg(F.count("*").alias("cnt"))
     )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("cnt"), F.asc("item"))
-    result = (
-        exact.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("item", "cnt")
-    )
+    result = _top_k_rows(exact, "item", k)
     if not certify:
         return result
     rows = result.collect()
@@ -1043,46 +788,34 @@ def mg_top_k(
     )
 
 
+def _top_k_rows(exact: DataFrame, item: str, k: int) -> DataFrame:
+    """The k rows of (item, cnt) with the highest count, ties by item asc."""
+    w = Window.orderBy(F.desc("cnt"), F.asc(item))
+    return exact.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).select(item, "cnt")
+
+
 class _CandidateSink:
     """Accumulator target for top_k_tokens phase 1: keeps exact
     (id, count) pairs fed by TokenDedupAccumulator's weighted flush."""
 
     def __init__(self):
-        import numpy as _np
-
-        self._ids = _np.empty(0, dtype=_np.int64)
-        self._counts = _np.empty(0, dtype=_np.int64)
+        self._ids = np.empty(0, dtype=np.int64)
+        self._counts = np.empty(0, dtype=np.int64)
 
     def add_ints(self, values, counts=None):
-        import numpy as _np
-
-        v = _np.asarray(values, dtype=_np.int64)
-        c = (
-            _np.asarray(counts, dtype=_np.int64)
-            if counts is not None
-            else _np.ones(len(v), dtype=_np.int64)
-        )
-        # fold into the running exact map (ids are unique per flush;
-        # across flushes, merge by sort)
-        ids = _np.concatenate([self._ids, v])
-        cnt = _np.concatenate([self._counts, c])
-        order = _np.argsort(ids, kind="stable")
-        ids, cnt = ids[order], cnt[order]
-        if len(ids):
-            first = _np.concatenate(([True], ids[1:] != ids[:-1]))
-            grp = _np.cumsum(first) - 1
-            uids = ids[first]
-            sums = _np.zeros(len(uids), dtype=_np.int64)
-            _np.add.at(sums, grp, cnt)
-            self._ids, self._counts = uids, sums
+        v = np.asarray(values, dtype=np.int64)
+        c = np.ones(len(v), np.int64) if counts is None else np.asarray(counts, dtype=np.int64)
+        # fold into the running exact map: sorted unique ids, summed counts
+        cnt = np.concatenate([self._counts, c])
+        self._ids, inv = np.unique(np.concatenate([self._ids, v]), return_inverse=True)
+        self._counts = np.zeros(len(self._ids), dtype=np.int64)
+        np.add.at(self._counts, inv, cnt)
         return self
 
     def top(self, m: int):
-        import numpy as _np
-
         if len(self._ids) <= m:
             return self._ids.tolist(), self._counts.tolist()
-        sel = _np.argpartition(-self._counts, m - 1)[:m]
+        sel = np.argpartition(-self._counts, m - 1)[:m]
         return self._ids[sel].tolist(), self._counts[sel].tolist()
 
 
@@ -1102,12 +835,17 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
 
         _NULL_GROUP = object()  # dict key for the NULL group
         sketches: dict = {}
+
+        def update(kv, rows: pa.RecordBatch) -> None:
+            sk = sketches.get(kv)
+            if sk is None:
+                sk = sketches[kv] = spec.factory()
+            spec.update(sk, rows)
+
         for b in batches:
             if not b.num_rows:
                 continue
             kcol = b.column(b.schema.get_field_index(key))
-            if isinstance(kcol, pa.ChunkedArray):
-                kcol = kcol.combine_chunks()
             if kcol.null_count:
                 # split the NULL-group rows off at the Arrow level:
                 # np.unique cannot sort None against str (TypeError),
@@ -1115,11 +853,7 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
                 # NaN — dropping nulls BEFORE to_numpy also keeps int
                 # keys exactly int64
                 null_mask = pc.is_null(kcol)
-                sub_null = b.filter(null_mask)
-                sk = sketches.get(_NULL_GROUP)
-                if sk is None:
-                    sk = sketches[_NULL_GROUP] = spec.factory()
-                spec.update(sk, sub_null)
+                update(_NULL_GROUP, b.filter(null_mask))
                 b = b.filter(pc.invert(null_mask))
                 if not b.num_rows:
                     continue
@@ -1127,17 +861,10 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
             keys = kcol.to_numpy(zero_copy_only=False)
             uniq, inv = np.unique(keys, return_inverse=True)
             if len(uniq) == 1:
-                sk = sketches.get(uniq[0])
-                if sk is None:
-                    sk = sketches[uniq[0]] = spec.factory()
-                spec.update(sk, b)
+                update(uniq[0], b)
                 continue
             for i, kv in enumerate(uniq):
-                sub = b.filter(pa.array(inv == i))
-                sk = sketches.get(kv)
-                if sk is None:
-                    sk = sketches[kv] = spec.factory()
-                spec.update(sk, sub)
+                update(kv, b.filter(pa.array(inv == i)))
         if sketches:
             ks = list(sketches)
             yield pa.RecordBatch.from_arrays(
@@ -1193,10 +920,9 @@ def grouped_sketch(
     if strategy != "salted":
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:  # applyInPandas groups are never empty
         sk = spec.factory()
-        if len(pdf):
-            spec.update(sk, pa.RecordBatch.from_pandas(pdf[list(spec.columns)], preserve_index=False))
+        spec.update(sk, pa.RecordBatch.from_pandas(pdf[list(spec.columns)], preserve_index=False))
         return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
 
     if not salt:
@@ -1204,17 +930,8 @@ def grouped_sketch(
 
     sc = salt_col or key
     salted = pruned.withColumn("__salt", F.pmod(F.xxhash64(F.col(sc), F.monotonically_increasing_id()), F.lit(salt)))
-
-    def build_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-        return build(pdf.drop(columns="__salt"))
-
-    partials = salted.groupBy(key, "__salt").applyInPandas(build_salted, out_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = reduce(lambda a, b: a.merge(b), (sketch_from_bytes(x) for x in pdf["sketch"]))
-        return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
-
-    return partials.groupBy(key).applyInPandas(merge_group, out_schema)
+    partials = salted.groupBy(key, "__salt").applyInPandas(build, out_schema)
+    return grouped_merge_sketch_column(partials, key)
 
 
 def sketch_estimates(df: DataFrame, col: str = "sketch",
@@ -1249,7 +966,7 @@ def grouped_merge_sketch_column(df: DataFrame, key: str, col: str = "sketch") ->
     The key keeps its input type (an int key stays int)."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = reduce(lambda a, b: a.merge(b), (sketch_from_bytes(x) for x in pdf[col]))
+        sk = _fold(sketch_from_bytes(x) for x in pdf[col])
         return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
 
     key_type = df.schema[key].dataType.simpleString()

@@ -149,7 +149,7 @@ def train_quality_classifier(
     n = labels.count()
     if n == 0:
         raise ValueError("empty labeled seed set")
-    bad = labels.filter(~F.col("y").isin(0.0, 1.0)).limit(1).collect()
+    bad = labels.filter(F.col("y").isNull() | ~F.col("y").isin(0.0, 1.0)).limit(1).collect()
     if bad:
         raise ValueError(f"labels must be 0/1, found y={bad[0]['y']!r} "
                          f"for id={bad[0]['id']!r}")

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from presto_bloomfilter_spark.functions.bloom import BloomFilter
+
 from . import aggregate as agg
 from .probe import contains_udf
 
@@ -155,7 +157,7 @@ def _bloom_on_grams(train_grams: DataFrame, test_grams: DataFrame,
     # grams, no distinct shuffle
     bf = agg.aggregate_sketch(
         test_grams.select(_bloomable(F.col("g")).alias("g")),
-        agg.bloom_over_strings("g", expected_grams, fpp),
+        agg.sketch_spec(BloomFilter, "g", "strings", expected_grams, fpp),
     )
     return _probe_and_aggregate(train_grams, bf)
 

@@ -109,12 +109,13 @@ def zorder_keys(df: DataFrame, cols: Sequence[str], bits: int = 16,
 def _kll_levels(df: DataFrame, col: str, bits: int, kll_k: int) -> list:
     """Approx mode: 2^bits - 1 split points from a distributed KLL
     sketch over the column (one aggregate, mergeable partials)."""
+    from presto_bloomfilter_spark.functions.kll import KLLSketch
     from presto_bloomfilter_spark.operators import aggregate as agg
 
     sk = agg.aggregate_sketch(
         df.select(F.col(col).cast("double").alias("v"))
           .where(F.col("v").isNotNull()),
-        agg.kll_over_column("v", k=kll_k))
+        agg.sketch_spec(KLLSketch, "v", "floats", k=kll_k))
     n_levels = 1 << bits
     splits = sorted({float(sk.quantile(q / n_levels))
                      for q in range(1, n_levels)})

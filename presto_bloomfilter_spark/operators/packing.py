@@ -49,8 +49,6 @@ from pyspark.sql import DataFrame, functions as F
 def _batch_tokens(batch: pa.RecordBatch, name: str) -> tuple[np.ndarray, np.ndarray]:
     """(flat values, per-doc lengths) of an array<int> column."""
     col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
     if col.null_count:
         # a NULL list is not an empty document — value_lengths() yields
         # null there, and a silent NaN->int64 cast would turn it into a

@@ -285,14 +285,16 @@ def bucket_by_quantile(df: DataFrame, value_col: str, n_buckets: int,
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    from .aggregate import aggregate_sketch, kll_over_column
+    from presto_bloomfilter_spark.functions.kll import KLLSketch
+
+    from .aggregate import aggregate_sketch, sketch_spec
 
     import numpy as np
 
     sk = aggregate_sketch(
         df.select(F.col(value_col).cast("double").alias("__v"))
           .filter(F.col("__v").isNotNull()),
-        kll_over_column("__v", k=k),
+        sketch_spec(KLLSketch, "__v", "floats", k=k),
     )
     if sk.n == 0:
         # no non-null values: every bucket is NULL, same as the rows

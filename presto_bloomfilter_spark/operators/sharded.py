@@ -59,7 +59,7 @@ def build_sharded_bloom(
         "__shard", _shard_col(F.col("__k"), shards)
     )
     return agg.grouped_sketch(
-        keyed, "__shard", agg.bloom_over_strings("__k", expected_insertions_per_shard, fpp)
+        keyed, "__shard", agg.sketch_spec(BloomFilter, "__k", "strings", expected_insertions_per_shard, fpp)
     ).withColumnRenamed("__shard", "shard")
 
 

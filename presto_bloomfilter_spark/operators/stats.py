@@ -38,7 +38,7 @@ valid for the returned lazy plan's lifetime.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 __all__ = ["unigram_counts", "source_token_divergence", "source_pairwise_jsd",
            "pmi_bigrams", "zipf_alpha"]
@@ -200,8 +200,6 @@ def zipf_alpha(
     vocabulary-bounded aggregate, then a per-source window over at most
     |sources| x |vocab| rows.  alpha rounded to 6 decimals.
     """
-    from pyspark.sql import Window
-
     src = (F.col(source_col) if source_col is not None
            else F.lit("<all>")).alias("source")
     per = (
@@ -312,8 +310,6 @@ def source_datacard(df: DataFrame, text_col: str = "text",
     (source, n_docs, n_words, n_chars_sum, n_chars_min, p50_chars,
      n_chars_max, dup_docs, n_langs, top_lang).
     """
-    from pyspark.sql import Window
-
     words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     base = df.select(
         F.col(source_col).alias("source"),
@@ -385,8 +381,6 @@ def vocab_coverage(df: DataFrame, budgets: list[int],
     cross join, and the final aggregate keys on (vocab_size, source).
     Word semantics = repo-wide str.split().
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
     words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     counts = (
@@ -445,8 +439,6 @@ def psi_drift(ref_df: DataFrame, cur_df: DataFrame,
     outer join on bucket, totals by single-row broadcast cross join —
     row data never moves.
     """
-    from pyspark.sql import Window
-
     rc = ref_df.groupBy(F.col(bucket_col).alias("bucket")).agg(
         F.count(F.lit(1)).alias("ref_cnt"))
     cc = cur_df.groupBy(F.col(bucket_col).alias("bucket")).agg(
@@ -510,8 +502,6 @@ def log_odds_keywords(df: DataFrame, group_a: str, group_b: str,
     totals arrive by a single-row broadcast cross join and the two
     top-k's are TakeOrderedAndProject — no global sort, no Python.
     """
-    from pyspark.sql import Window
-
     words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     tagged = df.filter(F.col(source_col).isin([group_a, group_b])).select(
         F.when(F.col(source_col) == group_a, F.lit("a")).otherwise(F.lit("b"))
@@ -575,22 +565,35 @@ def percentile_normalize(df: DataFrame, value_col: str,
     over that histogram, and a join back keyed on (key, value) — the
     only row-data shuffle is the equi-join on the value it already
     carries.
-    """
-    from pyspark.sql import Window
 
+    NULLs: a NULL value is not part of its key's distribution (the
+    counts cover non-NULL values only) and its row gets a NULL
+    ``out_col``; NULL keys form one group of their own.  Every input
+    row comes out exactly once.
+    """
     keys = [by] if by else []
-    hist = df.groupBy(*keys, value_col).agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.partitionBy(*keys) if keys else Window.partitionBy()) \
-        .orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.withColumn("__lt", F.coalesce(F.sum("__c").over(w), F.lit(0)))
-    totals = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")) if keys \
-        else df.agg(F.count(F.lit(1)).alias("__n"))
-    lookup = (cum.join(F.broadcast(totals), keys) if keys
-              else cum.crossJoin(F.broadcast(totals)))
-    lookup = lookup.select(
-        *keys, value_col,
-        (F.col("__lt") / F.col("__n")).alias(out_col))
-    return df.join(lookup, keys + [value_col])
+    hist = _value_histogram(df, keys, value_col)
+    part = Window.partitionBy(*keys)
+    below = part.orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
+    lookup = hist.select(
+        *[F.col(k).alias("__key") for k in keys], F.col(value_col).alias("__v"),
+        (F.coalesce(F.sum("__c").over(below), F.lit(0)) / F.sum("__c").over(part)).alias(out_col))
+    on = F.col(value_col) == F.col("__v")
+    if by:
+        on = on & F.col(by).eqNullSafe(F.col("__key"))
+    return df.join(lookup, on, "left").select(*_lead(df, [*keys, value_col]), out_col)
+
+
+def _value_histogram(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """(keys, value, __c) row counts per distinct non-NULL value."""
+    return (df.filter(F.col(value_col).isNotNull())
+            .groupBy(*keys, value_col).agg(F.count(F.lit(1)).alias("__c")))
+
+
+def _lead(df: DataFrame, lead: list[str]) -> list[str]:
+    """df's columns with ``lead`` first — the order of an equi-join
+    USING ``lead``."""
+    return lead + [c for c in df.columns if c not in lead]
 
 
 def winsorize(df: DataFrame, value_col: str, by: str | None = None,
@@ -607,30 +610,37 @@ def winsorize(df: DataFrame, value_col: str, by: str | None = None,
     itself is a map-only greatest/least.  Adds ``out_col`` (default
     ``{value_col}_w``) plus ``{value_col}_lo`` / ``{value_col}_hi``
     threshold columns for auditing.  Exact ⇒ fully SQL-replayable.
-    """
-    from pyspark.sql import Window
 
+    NULLs: a NULL value is not part of its key's distribution and its
+    row gets a NULL ``out_col``; NULL keys form one group of their own.
+    Every input row comes out exactly once.
+    """
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError("need 0 <= lo < hi <= 1")
     out_col = out_col or f"{value_col}_w"
     keys = [by] if by else []
-    hist = df.groupBy(*keys, value_col).agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.partitionBy(*keys) if keys else Window.partitionBy()) \
-        .orderBy(value_col).rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    totals = (df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")) if keys
-              else df.agg(F.count(F.lit(1)).alias("__n")))
-    cum = (cum.join(F.broadcast(totals), keys) if keys
-           else cum.crossJoin(F.broadcast(totals)))
+    part = Window.partitionBy(*keys)
+    cum = _value_histogram(df, keys, value_col).select(
+        *keys, value_col,
+        F.sum("__c").over(part.orderBy(value_col).rowsBetween(Window.unboundedPreceding, 0))
+        .alias("__cum"),
+        F.sum("__c").over(part).alias("__n"))
     th = cum.groupBy(*keys).agg(
         F.min(F.when(F.col("__cum") >= F.ceil(F.lit(lo) * F.col("__n")),
                      F.col(value_col))).alias(f"{value_col}_lo"),
         F.min(F.when(F.col("__cum") >= F.ceil(F.lit(hi) * F.col("__n")),
                      F.col(value_col))).alias(f"{value_col}_hi"),
     )
-    joined = (df.join(F.broadcast(th), keys) if keys
-              else df.crossJoin(F.broadcast(th)))
+    if by:
+        joined = df.join(F.broadcast(th.withColumnRenamed(by, "__key")),
+                         F.col(by).eqNullSafe(F.col("__key")), "left").select(
+            *_lead(df, [by]), f"{value_col}_lo", f"{value_col}_hi")
+    else:
+        joined = df.crossJoin(F.broadcast(th))
+    # greatest/least skip NULL arguments, so a NULL value would clip to
+    # the hi threshold without the explicit guard
     return joined.withColumn(
         out_col,
-        F.greatest(F.col(f"{value_col}_lo"),
-                   F.least(F.col(f"{value_col}_hi"), F.col(value_col))))
+        F.when(F.col(value_col).isNotNull(),
+               F.greatest(F.col(f"{value_col}_lo"),
+                          F.least(F.col(f"{value_col}_hi"), F.col(value_col)))))

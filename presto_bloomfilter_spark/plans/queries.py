@@ -23,6 +23,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from presto_bloomfilter_spark import (
+    BloomFilter, CountMinSketch, CountSketch, CountingBloomFilter, DDSketch, ExactGram,
+    FrequentDirections, HyperLogLog, KLLSketch, MomentsSketch, TDigest, ThetaSketch)
 from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators import (
@@ -56,7 +59,7 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
     big = orders.filter(F.col("o_totalprice") > 300_000).select("o_orderkey")
     filtered = bloom_semi_join(spark, lineitem, "l_orderkey", big, "o_orderkey",
-                               expected_insertions=50_000, fpp=0.001)
+                               50_000, 0.001)
     return filtered.groupBy("l_returnflag").agg(
         F.count("*").alias("cnt"),
         F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
@@ -80,7 +83,7 @@ def q_sbbf_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
     big = orders.filter(F.col("o_totalprice") > 300_000).select("o_orderkey")
     filtered = bloom_semi_join(spark, lineitem, "l_orderkey", big, "o_orderkey",
-                               expected_insertions=50_000, fpp=0.001,
+                               50_000, 0.001,
                                kind="sbbf")
     return filtered.groupBy("l_returnflag").agg(
         F.count("*").alias("cnt"),
@@ -130,9 +133,9 @@ def q_cbf_delete_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = F.col("o_totalprice") > 250_000
     ins = orders.filter(big).select("o_orderkey")
     dels = orders.filter(big & (F.col("o_orderstatus") == "F")).select("o_orderkey")
-    sk = agg.aggregate_sketch(ins, agg.cbf_over_ints("o_orderkey", n=50_000, p=0.001))
+    sk = agg.aggregate_sketch(ins, agg.sketch_spec(CountingBloomFilter, "o_orderkey", "ints", 50_000, 0.001))
     sk.subtract(
-        agg.aggregate_sketch(dels, agg.cbf_over_ints("o_orderkey", n=50_000, p=0.001)))
+        agg.aggregate_sketch(dels, agg.sketch_spec(CountingBloomFilter, "o_orderkey", "ints", 50_000, 0.001)))
     pre = lineitem.filter(contains_udf(spark, sk, ints=True)(F.col("l_orderkey")))
     live = (orders.filter(big & (F.col("o_orderstatus") != "F"))
             .select(F.col("o_orderkey").alias("l_orderkey")).distinct())
@@ -199,7 +202,7 @@ def q_sql_surface_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = orders.filter(F.col("o_totalprice") > 300_000).select(
         F.col("o_orderkey").cast("string").alias("k")
     )
-    bf = agg.aggregate_sketch(keys, agg.bloom_over_strings("k", 50_000, 0.001))
+    bf = agg.aggregate_sketch(keys, agg.sketch_spec(BloomFilter, "k", "strings", 50_000, 0.001))
     compat.publish_sketch_view(spark, bf, "pbs_bloom")
     return spark.sql(
         """
@@ -225,7 +228,7 @@ def q_bloom_member_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bloom_filter(el) + bloom_filter_contains parity: every inserted
     member must probe true (no false negatives)."""
     nation = load_table(spark, sf_dir, "nation")
-    bf = agg.aggregate_sketch(nation, agg.bloom_over_strings("n_name", 1000, 0.01))
+    bf = agg.aggregate_sketch(nation, agg.sketch_spec(BloomFilter, "n_name", "strings", 1000, 0.01))
     probed = nation.withColumn("hit", contains_udf(spark, bf)(F.col("n_name")))
     return probed.agg(
         F.count("*").alias("n_members"),
@@ -243,7 +246,8 @@ def q_bloom_merge_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     BloomFilterFromString.java:23-38): per-source blooms built grouped,
     merged into one, which must contain every doc_id."""
     tokens = load_tokens(spark, sf_dir)
-    per_source = agg.grouped_sketch(tokens, "source", agg.bloom_over_strings("doc_id", 200_000, 0.001))
+    per_source = agg.grouped_sketch(
+        tokens, "source", agg.sketch_spec(BloomFilter, "doc_id", "strings", 200_000, 0.001))
     merged = agg.merge_sketch_column(per_source, "sketch")
     probed = tokens.withColumn("hit", contains_udf(spark, merged)(F.col("doc_id")))
     return probed.agg(
@@ -259,7 +263,7 @@ SELECT COUNT(*) AS n_docs, COUNT(*) AS n_contained FROM {_TOKENS_SQL}
 
 def q_hll_docs_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_strings("doc_id"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(HyperLogLog, "doc_id", "strings"))
     ests = [(r[0], float(sketch_from_bytes(r.sketch).estimate())) for r in per_src.collect()]
     lit = spark.createDataFrame(ests, "source string, est double")
     exact = tokens.groupBy("source").agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -282,7 +286,7 @@ def q_hll_docs_by_source_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources): rows group by (source, salt) first, per-key partials
     merge second — no task ever owns all of the 55%-skewed 'web' key."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_strings("doc_id"),
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(HyperLogLog, "doc_id", "strings"),
                                  strategy="salted", salt=8)
     ests = [(r[0], float(sketch_from_bytes(r.sketch).estimate())) for r in per_src.collect()]
     lit = spark.createDataFrame(ests, "source string, est double")
@@ -302,7 +306,7 @@ def q_hll_tokens_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew costs nothing because a task only sees its own partition's
     share of the hot key (web ≈ 55%)."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens"))
     ests = [(r[0], float(sketch_from_bytes(r.sketch).estimate())) for r in per_src.collect()]
     lit = spark.createDataFrame(ests, "source string, est double")
     exact = (
@@ -331,8 +335,8 @@ def q_hll_tokens_by_source_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge — raw token rows never cross a process boundary."""
     tokens = load_tokens(spark, sf_dir)
     per_src = agg.grouped_sketch_from_parquet(
-        spark, tokens_parquet_path(sf_dir), "source", agg.hll_over_tokens("tokens"), n_tasks=8
-    )
+        spark, tokens_parquet_path(sf_dir), "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens"),
+        n_tasks=8)
     ests = [(r[0], float(sketch_from_bytes(r.sketch).estimate())) for r in per_src.collect()]
     lit = spark.createDataFrame(ests, "source string, est double")
     exact = (
@@ -362,7 +366,7 @@ def q_hll_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens"))
     sk = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     a, b = sk["web"], sk["books"]
     est = intersection_estimate(a, b)
@@ -392,7 +396,7 @@ def q_theta_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/theta.py).  Asserted within 10% of the exact overlap
     (3-sigma of ~k*J common samples; measured ~2% on this data)."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.theta_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(ThetaSketch, "tokens", "tokens"))
     sk = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     est = sk["web"].intersection_estimate(sk["books"])
     webs = tokens.filter(F.col("source") == "web").select(F.explode("tokens").alias("t")).distinct()
@@ -421,7 +425,7 @@ def q_theta_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact (same 3-sigma-of-common-samples argument as the overlap gate;
     measured ~2-3% on this data)."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.theta_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(ThetaSketch, "tokens", "tokens"))
     sk = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     d_est = sk["web"].difference_estimate(sk["books"])
     j_est = sk["web"].jaccard_estimate(sk["books"])
@@ -454,7 +458,7 @@ def q_cms_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     tokens = load_tokens(spark, sf_dir)
-    cms = agg.aggregate_sketch(tokens, agg.cms_over_tokens("tokens", eps=1e-4))
+    cms = agg.aggregate_sketch(tokens, agg.sketch_spec(CountMinSketch, "tokens", "tokens", eps=1e-4))
     w = Window.orderBy(F.desc("cnt"), F.asc("token"))
     top = (
         tokens.select(F.explode("tokens").alias("token"))
@@ -937,8 +941,8 @@ def q_fd_embedding_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     d = 64
     vecs = emb.select("embedding")
-    gram = agg.aggregate_sketch(vecs, agg.gram_over_vectors("embedding", d))
-    fd = agg.aggregate_sketch(vecs, agg.fd_over_vectors("embedding", d, ell=32))
+    gram = agg.aggregate_sketch(vecs, agg.sketch_spec(ExactGram, "embedding", "vectors", d))
+    fd = agg.aggregate_sketch(vecs, agg.sketch_spec(FrequentDirections, "embedding", "vectors", d, ell=32))
     diff_eigs = np.linalg.eigvalsh(gram.G - fd.gram())
     tol = 1e-6 * fd.fnorm2
     psd_ok = bool(diff_eigs.min() >= -tol) and gram.n == fd.n
@@ -1143,7 +1147,7 @@ def q_countsketch_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select("source", F.explode(split_words("text")).alias("word"))
 
     per_src = agg.grouped_sketch(
-        words, "source", agg.countsketch_over_strings("word", width=width))
+        words, "source", agg.sketch_spec(CountSketch, "word", "strings", width=width))
     sks = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     a, b = sorted(sks)[:2]
     merged = None
@@ -1274,7 +1278,7 @@ SELECT token, cnt, TRUE AS bloom_ok, TRUE AS cms_ok, TRUE AS hll_ok FROM (
 def q_kll_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source n_tok p50/p90 via KLL, asserted within rank-error."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.kll_over_column("n_tok"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(KLLSketch, "n_tok", "floats"))
     rows = []
     tol = None
     for r in per_src.collect():
@@ -1303,7 +1307,7 @@ def q_tdigest_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling (north_rule lists both t-digest and KLL); asserted within
     rank-error envelopes against the exact empirical CDF."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.tdigest_over_column("n_tok"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.sketch_spec(TDigest, "n_tok", "floats"))
     rows = []
     tol = None
     for r in per_src.collect():
@@ -1340,7 +1344,7 @@ def q_ddsketch_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = load_tokens(spark, sf_dir)
     alpha = 0.01
     per_src = agg.grouped_sketch(
-        tokens, "source", agg.ddsketch_over_column("n_tok", alpha=alpha))
+        tokens, "source", agg.sketch_spec(DDSketch, "n_tok", "floats", alpha=alpha))
     rows = []
     for r in per_src.collect():
         sk = sketch_from_bytes(r.sketch)
@@ -1451,7 +1455,7 @@ def q_persist_load_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_bloomfilter_spark import compat
 
     nation = load_table(spark, sf_dir, "nation")
-    bf = agg.aggregate_sketch(nation, agg.bloom_over_strings("n_name", 1000, 0.01))
+    bf = agg.aggregate_sketch(nation, agg.sketch_spec(BloomFilter, "n_name", "strings", 1000, 0.01))
 
     root = tempfile.mkdtemp(prefix="pbs_persist_")
     path = os.path.join(root, "nation_names.sketch")
@@ -1514,7 +1518,7 @@ def q_sketch_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     compat.register_sql_functions(spark)
     nation = load_table(spark, sf_dir, "nation")
     nation.createOrReplaceTempView("pbs_nation_intro")
-    bf = agg.aggregate_sketch(nation, agg.bloom_over_strings("n_name", 1000, 0.01))
+    bf = agg.aggregate_sketch(nation, agg.sketch_spec(BloomFilter, "n_name", "strings", 1000, 0.01))
     compat.publish_sketch_view(spark, bf, "pbs_bf_intro")
     b64 = compat.to_string(bf)
     # Python-API forms agree before the SQL forms are gated
@@ -4254,7 +4258,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"{root}/sink"
     d = StreamingBloomDedup(
         SketchStore(f"{root}/store"), "gate", sink,
-        expected_insertions=50_000, fpp=0.001)
+        50_000, 0.001)
     epoch0 = docs.filter(F.col("doc_id").cast("long") % 4 == 0)
     for e in range(4):
         batch = docs.filter(F.col("doc_id").cast("long") % 4 == e)
@@ -4340,7 +4344,7 @@ def q_streaming_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 
     sink = run_stream_from_files(
         spark, in_dir, "doc_id string",
-        agg.hll_over_strings("doc_id"),
+        agg.sketch_spec(HyperLogLog, "doc_id", "strings"),
         SketchStore(f"{root}/store"), "maint", f"{root}/ckpt",
     )
     est = sink.current().estimate()
@@ -4458,7 +4462,7 @@ def q_moments_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = load_tokens(spark, sf_dir).select(
         "source", F.col("n_tok").cast("double").alias("ntokd"))
     grouped = agg.grouped_sketch(
-        tokens, "source", agg.moments_over_column("ntokd", 0.0, 1024.0))
+        tokens, "source", agg.sketch_spec(MomentsSketch, "ntokd", "floats", 0.0, 1024.0))
     est = [(r["source"],
             float(sketch_from_bytes(r["sketch"]).quantile(0.5)),
             float(sketch_from_bytes(r["sketch"]).quantile(0.9)))
@@ -4492,7 +4496,7 @@ def q_sql_sketch_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "source")
     agg.grouped_sketch(
-        docs, "source", agg.hll_over_strings("doc_id")
+        docs, "source", agg.sketch_spec(HyperLogLog, "doc_id", "strings")
     ).createOrReplaceTempView("pbs_sketch_tbl")
     compat.register_sql_functions(spark)
     est = spark.sql(
@@ -4524,9 +4528,9 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_custkey")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
 
-    cms_li = agg.aggregate_sketch(li, agg.cms_over_ints("l_partkey", eps=1e-5))
-    cms_o = agg.aggregate_sketch(orders, agg.cms_over_ints("o_custkey", eps=1e-5))
-    cms_c = agg.aggregate_sketch(cust, agg.cms_over_ints("c_custkey", eps=1e-5))
+    cms_li = agg.aggregate_sketch(li, agg.sketch_spec(CountMinSketch, "l_partkey", "ints", eps=1e-5))
+    cms_o = agg.aggregate_sketch(orders, agg.sketch_spec(CountMinSketch, "o_custkey", "ints", eps=1e-5))
+    cms_c = agg.aggregate_sketch(cust, agg.sketch_spec(CountMinSketch, "c_custkey", "ints", eps=1e-5))
 
     self_est = cms_li.inner_product(cms_li)
     self_slack = cms_li.inner_product_bound(cms_li)
@@ -4618,9 +4622,9 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id")).repartition(8)
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_ckpt_"))
     sk1, built1 = checkpointed_aggregate(
-        spark, docs, agg.hll_over_strings("doc_id"), store, "cr")
+        spark, docs, agg.sketch_spec(HyperLogLog, "doc_id", "strings"), store, "cr")
     sk2, built2 = checkpointed_aggregate(
-        spark, docs, agg.hll_over_strings("doc_id"), store, "cr")
+        spark, docs, agg.sketch_spec(HyperLogLog, "doc_id", "strings"), store, "cr")
     n_exact = docs.distinct().count()
     est = sk2.estimate()
     return spark.createDataFrame(
@@ -4662,7 +4666,7 @@ def q_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_a = sorted(glob.glob(root + "/a/*.parquet"))
     files_b = sorted(glob.glob(root + "/b/*.parquet"))
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_incstore_"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.sketch_spec(HyperLogLog, "doc_id", "strings")
 
     _, n1 = incremental_aggregate(spark, files_a, spec, store, "inc")
     sk2, n2 = incremental_aggregate(spark, files_a + files_b, spec, store, "inc")
@@ -4719,7 +4723,7 @@ def q_incremental_update_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.commit(adds=files_b)
 
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_deltastore_"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.sketch_spec(HyperLogLog, "doc_id", "strings")
     sk1, n1 = incremental_aggregate_delta(spark, t, spec, store, "incd", 1)
     snap1 = IncrementalBuild(store, "incd").snapshot
     sk2, n2 = incremental_aggregate_delta(spark, t, spec, store, "incd")
@@ -4783,7 +4787,7 @@ def q_streaming_windowed_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = run_windowed_stream_from_files(
         spark, in_dir, "ts timestamp, user_id string",
-        agg.hll_over_strings("user_id"), time_col="ts",
+        agg.sketch_spec(HyperLogLog, "user_id", "strings"), time_col="ts",
         window_duration="1 day", watermark_delay="40 days",
         checkpoint=f"{root}/ckpt",
     ).collect()

@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
 __all__ = ["DeltaTable", "create_delta_table", "DeltaSnapshot"]
@@ -178,13 +179,18 @@ class DeltaTable:
 
     def _write_commit(self, version: int, lines: list[str]) -> int:
         final = _commit_path(self.log_dir, version)
-        tmp = final + f".tmp-{os.getpid()}"
+        tmp = final + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             fh.write("\n".join(lines) + "\n")
-        if os.path.exists(final):  # put-if-absent: lost the commit race
+        # put-if-absent: link() fails atomically when another writer's
+        # commit already holds the name, where exists()+rename() would
+        # let the race's loser replace the winner's commit
+        try:
+            os.link(tmp, final)
+        except FileExistsError:
+            raise FileExistsError(f"commit {version} already exists") from None
+        finally:
             os.unlink(tmp)
-            raise FileExistsError(f"commit {version} already exists")
-        os.rename(tmp, final)
         return version
 
 

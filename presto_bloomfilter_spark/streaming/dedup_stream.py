@@ -215,13 +215,10 @@ class StreamingBloomDedup:
             else:
                 # large batch: build the digest bloom distributed, then
                 # union into the seen-set (identical geometry)
-                from presto_bloomfilter_spark.operators.aggregate import (
-                    aggregate_sketch,
-                    bloom_over_strings,
-                )
+                from presto_bloomfilter_spark.operators.aggregate import aggregate_sketch, sketch_spec
 
                 part = aggregate_sketch(
-                    fresh.select("__digest"), bloom_over_strings("__digest", self.n, self.p)
+                    fresh.select("__digest"), sketch_spec(BloomFilter, "__digest", "strings", self.n, self.p)
                 )
                 newest.merge(part)
         fresh.unpersist()

@@ -8,6 +8,7 @@ from pyspark.sql import SparkSession, functions as F
 
 sys.path.insert(0, sys.argv[1])
 
+from presto_bloomfilter_spark import BloomFilter, HyperLogLog
 from presto_bloomfilter_spark.operators import aggregate as agg
 
 marker = tempfile.mktemp(prefix="pbs_retry_")
@@ -36,10 +37,10 @@ def fail_once(it):
 
 
 flaky = base.mapInPandas(fail_once, "k string")
-sk_flaky = agg.aggregate_sketch(flaky, agg.bloom_over_strings("k", n=500_000, p=0.01))
+sk_flaky = agg.aggregate_sketch(flaky, agg.sketch_spec(BloomFilter, "k", "strings", 500_000, 0.01))
 assert os.path.exists(marker), "injection never fired — test is vacuous"
 
-sk_clean = agg.aggregate_sketch(base, agg.bloom_over_strings("k", n=500_000, p=0.01))
+sk_clean = agg.aggregate_sketch(base, agg.sketch_spec(BloomFilter, "k", "strings", 500_000, 0.01))
 assert sk_flaky.to_bytes() == sk_clean.to_bytes(), \
     "retried build diverged from failure-free build"
 
@@ -49,10 +50,10 @@ gbase = spark.range(0, 100_000).selectExpr(
     "cast(id as string) as k", "cast(id % 4 as string) as g").repartition(8)
 gflaky = gbase.mapInPandas(fail_once, "k string, g string")
 a = {r["g"]: bytes(r["sketch"]) for r in
-     agg.grouped_sketch(gflaky, "g", agg.hll_over_strings("k")).collect()}
+     agg.grouped_sketch(gflaky, "g", agg.sketch_spec(HyperLogLog, "k", "strings")).collect()}
 assert os.path.exists(marker), "grouped injection never fired"
 b = {r["g"]: bytes(r["sketch"]) for r in
-     agg.grouped_sketch(gbase, "g", agg.hll_over_strings("k")).collect()}
+     agg.grouped_sketch(gbase, "g", agg.sketch_spec(HyperLogLog, "k", "strings")).collect()}
 assert a == b, "grouped retry diverged"
 print("RETRY_DETERMINISM_OK")
 spark.stop()

@@ -6,7 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from presto_bloomfilter_spark import BloomFilter, sketch_from_bytes
+from presto_bloomfilter_spark import BloomFilter, CountMinSketch, HyperLogLog, KLLSketch, sketch_from_bytes
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators.probe import bloom_semi_join, filter_by_sketch
 from presto_bloomfilter_spark.sources.corpus import load_tokens
@@ -19,7 +19,7 @@ def tokens(spark, sf_dir):
 
 def test_bloom_over_doc_ids(spark, tokens):
     n = tokens.count()
-    bf = agg.aggregate_sketch(tokens, agg.bloom_over_strings("doc_id", 10_000, 0.01))
+    bf = agg.aggregate_sketch(tokens, agg.sketch_spec(BloomFilter, "doc_id", "strings", 10_000, 0.01))
     ids = [r.doc_id for r in tokens.select("doc_id").collect()]
     assert bf.might_contain_strings(ids).all()  # no false negatives
     absent = [f"nope-{i}" for i in range(5000)]
@@ -30,7 +30,7 @@ def test_bloom_over_doc_ids(spark, tokens):
 def test_parallelism_invariance(spark, tokens):
     """Same sketch bytes at 1, 4, 13 partitions — the key invariant for
     a hand-built partial/merge protocol (SURVEY.md §7)."""
-    spec = agg.bloom_over_tokens("tokens", 100_000, 0.01)
+    spec = agg.sketch_spec(BloomFilter, "tokens", "tokens", 100_000, 0.01)
     digests = set()
     for parts in (1, 4, 13):
         bf = agg.aggregate_sketch(tokens.repartition(parts), spec, fan_in=4)
@@ -39,7 +39,7 @@ def test_parallelism_invariance(spark, tokens):
 
 
 def test_hll_vs_exact_and_spark_builtin(spark, tokens):
-    hll = agg.aggregate_sketch(tokens, agg.hll_over_tokens("tokens"))
+    hll = agg.aggregate_sketch(tokens, agg.sketch_spec(HyperLogLog, "tokens", "tokens"))
     exact = tokens.select(F.explode("tokens").alias("t")).agg(
         F.countDistinct("t").alias("d")
     ).collect()[0].d
@@ -51,7 +51,7 @@ def test_hll_vs_exact_and_spark_builtin(spark, tokens):
 
 
 def test_cms_token_frequencies(spark, tokens):
-    cms = agg.aggregate_sketch(tokens, agg.cms_over_tokens("tokens", eps=1e-4))
+    cms = agg.aggregate_sketch(tokens, agg.sketch_spec(CountMinSketch, "tokens", "tokens", eps=1e-4))
     top = (
         tokens.select(F.explode("tokens").alias("t"))
         .groupBy("t")
@@ -68,7 +68,7 @@ def test_cms_token_frequencies(spark, tokens):
 
 
 def test_kll_ntok_quantiles(spark, tokens):
-    kll = agg.aggregate_sketch(tokens, agg.kll_over_column("n_tok"))
+    kll = agg.aggregate_sketch(tokens, agg.sketch_spec(KLLSketch, "n_tok", "floats"))
     exact = tokens.approxQuantile("n_tok", [0.5], 0.0)[0]
     n = tokens.count()
     est = kll.quantile(0.5)
@@ -80,7 +80,7 @@ def test_grouped_sketch_strategies_agree(spark, tokens):
     """map_side partials, plain grouped, and salted grouped must all
     produce byte-identical per-key HLLs (register-max merge is
     order-insensitive)."""
-    spec = agg.hll_over_tokens("tokens")
+    spec = agg.sketch_spec(HyperLogLog, "tokens", "tokens")
     plain = {r[0]: sketch_from_bytes(r.sketch) for r in agg.grouped_sketch(tokens, "source", spec).collect()}
     grouped = {r[0]: sketch_from_bytes(r.sketch)
                for r in agg.grouped_sketch(tokens, "source", spec, strategy="salted").collect()}
@@ -102,9 +102,10 @@ def test_grouped_sketch_strategies_agree(spark, tokens):
 
 
 def test_merge_sketch_column(spark, tokens):
-    per_source = agg.grouped_sketch(tokens, "source", agg.bloom_over_tokens("tokens", 100_000))
+    per_source = agg.grouped_sketch(
+        tokens, "source", agg.sketch_spec(BloomFilter, "tokens", "tokens", 100_000))
     merged = agg.merge_sketch_column(per_source, "sketch")
-    direct = agg.aggregate_sketch(tokens, agg.bloom_over_tokens("tokens", 100_000))
+    direct = agg.aggregate_sketch(tokens, agg.sketch_spec(BloomFilter, "tokens", "tokens", 100_000))
     assert merged == direct  # union of per-group = global
 
 
@@ -123,7 +124,7 @@ def test_filter_by_sketch_and_semi_join(spark, tokens):
 
 def test_empty_input_yields_empty_sketch(spark, tokens):
     empty = tokens.filter(F.lit(False))
-    bf = agg.aggregate_sketch(empty, agg.bloom_over_strings("doc_id", 1000))
+    bf = agg.aggregate_sketch(empty, agg.sketch_spec(BloomFilter, "doc_id", "strings", 1000))
     assert bf.bits_set == 0 and bf.approx_items == 0
 
 
@@ -133,7 +134,7 @@ def test_fused_parquet_scan_matches_dataframe_path(spark, sf_dir):
     from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet
 
     path = ensure_tokens_parquet(sf_dir)
-    spec = agg.bloom_over_tokens("tokens", 100_000, 0.01)
+    spec = agg.sketch_spec(BloomFilter, "tokens", "tokens", 100_000, 0.01)
     via_df = agg.aggregate_sketch(load_tokens(spark, sf_dir), spec)
     via_fused = agg.aggregate_sketch_from_parquet(spark, path, spec, n_tasks=7)
     assert via_fused.sha256 == via_df.sha256
@@ -167,7 +168,7 @@ def test_dedup_accumulator_range_fallback():
     rng = np.random.default_rng(7)
     small = rng.integers(0, 50_000, size=10_000)
     huge = rng.integers(0, 2**31 - 1, size=10_000)
-    spec = agg.bloom_over_tokens("tokens", 100_000, 0.01)
+    spec = agg.sketch_spec(BloomFilter, "tokens", "tokens", 100_000, 0.01)
     acc = spec.factory()
     acc.add_flat(small)
     acc.add_flat(huge)  # range blows past cap → flush + direct
@@ -205,7 +206,8 @@ def test_multisketch_roundtrip_and_merge_invariance():
 def test_build_metrics_accumulators(spark, tokens):
     m = agg.BuildMetrics(spark)
     n = tokens.count()
-    agg.aggregate_sketch(tokens.repartition(6), agg.bloom_over_tokens("tokens", 100_000, 0.01),
+    agg.aggregate_sketch(tokens.repartition(6),
+                         agg.sketch_spec(BloomFilter, "tokens", "tokens", 100_000, 0.01),
                          fan_in=4, target_partials=6, metrics=m)
     d = m.as_dict()
     assert d["rows"] == n
@@ -219,7 +221,7 @@ def test_grouped_fused_parquet_matches_dataframe_grouped(spark, sf_dir):
     from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet
 
     path = ensure_tokens_parquet(sf_dir)
-    spec = agg.hll_over_tokens("tokens")
+    spec = agg.sketch_spec(HyperLogLog, "tokens", "tokens")
     via_df = {
         r[0]: sketch_from_bytes(r.sketch).estimate()
         for r in agg.grouped_sketch(load_tokens(spark, sf_dir), "source", spec).collect()
@@ -301,7 +303,7 @@ def test_int_probe_nullable_and_beyond_2pow53(spark):
     # direct filter path: NULL rows must drop, the adjacent big id must
     # NOT collide with the inserted one via float rounding
     sk = agg.aggregate_sketch(
-        build, agg.bloom_over_ints("k", 1000, 0.0001))
+        build, agg.sketch_spec(BloomFilter, "k", "ints", 1000, 0.0001))
     kept = {r.k for r in filter_by_sketch(spark, probe, "k", sk, ints=True).collect()}
     assert big_a in kept and 5 in kept and None not in kept
     assert big_b not in kept  # float64 would have rounded both to 2^53+2
@@ -322,7 +324,7 @@ def test_bloom_over_ints_ignores_nulls(spark):
     None — previously the Arrow→numpy float conversion crashed the
     whole build via the hash_ints64 float guard."""
     df = spark.createDataFrame([(1,), (None,), (3,)], "k bigint").coalesce(1)
-    sk = agg.aggregate_sketch(df, agg.bloom_over_ints("k", 1000, 0.01))
+    sk = agg.aggregate_sketch(df, agg.sketch_spec(BloomFilter, "k", "ints", 1000, 0.01))
     assert sk.might_contain(1) and sk.might_contain(3)
 
 
@@ -335,7 +337,7 @@ def test_grouped_sketch_null_keys_both_strategies(spark):
         "g string, v string").coalesce(1)
     for strategy, kw in (("map_side", {}), ("salted", {"salt": 2})):
         out = {r["g"]: r["sketch"] for r in agg.grouped_sketch(
-            df, "g", agg.hll_over_strings("v"), strategy=strategy, **kw).collect()}
+            df, "g", agg.sketch_spec(HyperLogLog, "v", "strings"), strategy=strategy, **kw).collect()}
         assert set(out) == {"a", None}, (strategy, set(out))
         from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
         assert round(sketch_from_bytes(out[None]).estimate()) == 2, strategy
@@ -348,7 +350,7 @@ def test_grouped_sketch_salted_int_key(spark):
     df = spark.createDataFrame(
         [(2021, "a"), (2021, "b"), (2022, "c")], "year int, v string")
     out = {r["year"]: r["sketch"] for r in agg.grouped_sketch(
-        df, "year", agg.hll_over_strings("v"), strategy="salted", salt=2).collect()}
+        df, "year", agg.sketch_spec(HyperLogLog, "v", "strings"), strategy="salted", salt=2).collect()}
     assert set(out) == {"2021", "2022"}
 
 
@@ -365,7 +367,7 @@ def test_grouped_from_parquet_rejects_diverging_key_types(spark, tmp_path):
         agg.grouped_sketch_from_parquet(spark, p + "/" +
                                         next(f for f in __import__("os").listdir(p)
                                              if f.endswith(".parquet")),
-                                        "k", agg.hll_over_strings("v"))
+                                        "k", agg.sketch_spec(HyperLogLog, "v", "strings"))
 
 
 def test_grouped_sketch_key_labels_agree_across_strategies(spark):
@@ -379,7 +381,7 @@ def test_grouped_sketch_key_labels_agree_across_strategies(spark):
     bools = spark.createDataFrame(
         [(True, "a"), (False, "b")], "k boolean, v string")
     for frame in (df, bools):
-        spec = agg.hll_over_strings("v")
+        spec = agg.sketch_spec(HyperLogLog, "v", "strings")
         m = {r["k"] for r in agg.grouped_sketch(frame, "k", spec).collect()}
         s = {r["k"] for r in agg.grouped_sketch(
             frame, "k", spec, strategy="salted", salt=2).collect()}

@@ -154,6 +154,15 @@ def test_validation(spark, labeled):
         classifier.QualityClassifier((0.0,) * 3, buckets=8, iters=1, lr=1.0)
 
 
+def test_null_label_raises(spark, labeled):
+    """A NULL label is outside the 0/1 contract: it must raise, not drop
+    out of the loss silently."""
+    one_null = labeled.withColumn(
+        "label", F.when(F.col("doc_id") == 3, F.lit(None)).otherwise(F.col("label")))
+    with pytest.raises(ValueError, match="labels must be 0/1, found y=None"):
+        classifier.train_quality_classifier(one_null, iters=1)
+
+
 # ------------------- multiclass (trained language ID) -------------------
 
 

@@ -3,6 +3,7 @@ byte-identical merge algebra, collapsing bound, serialization, guards."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from presto_bloomfilter_spark import DDSketch, sketch_from_bytes
 
@@ -72,6 +73,39 @@ def test_collapsing_bounds_size_and_keeps_upper_quantiles():
     # the folded mass sits below ~p3; everything above is untouched
     for q in (0.1, 0.5, 0.9, 0.99):
         assert _rel_err(data, sk, q) <= 0.0101, q
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.floats(-60.0, 60.0), min_size=1, max_size=300),
+       st.lists(st.integers(0, 400), max_size=6), st.randoms(use_true_random=False))
+def test_past_max_bins_bytes_stay_merge_order_free_and_upper_quantiles_keep_alpha(
+        log_values, cuts, rnd):
+    """Input that crosses max_bins: the fold happens, the bytes still do
+    not depend on how the input is split or merged, and exactly the
+    quantiles above the fold bucket keep the alpha bound."""
+    alpha, max_bins = 0.05, 16
+    ladder = np.geomspace(1e-3, 1e3, 60)  # ~70 buckets: always crosses max_bins
+    data = np.concatenate([ladder, np.exp(log_values)])
+    direct = DDSketch(alpha, max_bins).add(data)
+    assert direct.collapsed and len(direct._pos_idx) == max_bins
+    assert direct.n == len(data)
+
+    parts = [DDSketch(alpha, max_bins).add(c)
+             for c in np.split(rnd.sample(list(data), len(data)), sorted(cuts))]
+    while len(parts) > 1:  # random pairwise merge tree
+        i = rnd.randrange(len(parts) - 1)
+        a, b = parts.pop(i), parts.pop(i)
+        parts.insert(i, a.merge(b) if rnd.random() < 0.5 else b.merge(a))
+    assert parts[0].to_bytes() == direct.to_bytes()
+
+    fold = int(direct._pos_idx[0])
+    for q in np.linspace(0.0, 1.0, 41):
+        exact = np.quantile(data, q, method="higher")
+        est = direct.quantile(q)
+        if direct._bucket(np.array([exact]))[0] > fold:
+            assert abs(est - exact) <= alpha * exact * (1 + 1e-9), q
+        else:
+            assert est == direct._value(np.array([fold]))[0], q
 
 
 def test_serialization_roundtrip_and_kind_dispatch():

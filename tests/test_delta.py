@@ -14,6 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from presto_bloomfilter_spark import HyperLogLog
 from presto_bloomfilter_spark.sources import delta
 
 
@@ -94,6 +95,51 @@ def test_commit_race_is_put_if_absent(table):
     assert "f1.parquet" in open(table.log_dir + "/" + "0" * 19 + "1.json").read()
 
 
+def test_two_writers_same_version_exactly_one_wins(table, monkeypatch):
+    """Two writers commit version 1 at once: one commit lands, the
+    other writer gets FileExistsError, and no temp file is left.  Each
+    writer's publishing call waits until the other writer has got that
+    far, so both have finished any existence check before either
+    commit appears — the interleaving a check-then-rename loses."""
+    import threading
+
+    publish_gate = threading.Barrier(2)
+
+    def gated(fn):
+        def publish(*args, **kwargs):
+            try:
+                publish_gate.wait(timeout=5)
+            except threading.BrokenBarrierError:  # the other writer never got here
+                pass
+            return fn(*args, **kwargs)
+        return publish
+
+    for name in ("link", "rename", "replace"):
+        monkeypatch.setattr(os, name, gated(getattr(os, name)))
+    results = {}
+
+    def writer(name):
+        handle = delta.DeltaTable(table.path)
+        line = json.dumps({"add": {"path": f"data/{name}.parquet", "size": 1,
+                                   "dataChange": True}})
+        try:
+            results[name] = handle._write_commit(handle.latest_version() + 1, [line])
+        except FileExistsError as e:
+            results[name] = e
+
+    threads = [threading.Thread(target=writer, args=(n,)) for n in ("a", "b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+        assert not t.is_alive()
+    winners = [n for n, r in results.items() if r == 1]
+    losers = [n for n, r in results.items() if isinstance(r, FileExistsError)]
+    assert len(winners) == 1 and len(losers) == 1
+    assert f"{winners[0]}.parquet" in open(table.log_dir + "/" + "0" * 19 + "1.json").read()
+    assert sorted(os.listdir(table.log_dir)) == ["0" * 20 + ".json", "0" * 19 + "1.json"]
+
+
 def test_checkpointed_table_is_loud(table):
     open(table.log_dir + "/_last_checkpoint", "w").write("{}")
     with pytest.raises(NotImplementedError, match="checkpoint"):
@@ -123,7 +169,7 @@ def test_incremental_aggregate_delta_snapshot_keyed(spark, table, tmp_path):
                         [f"b{i}" for i in range(200)])
     table.commit(adds=[f1])
     store = SketchStore(str(tmp_path / "store"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.sketch_spec(HyperLogLog, "doc_id", "strings")
 
     sk1, n1 = incremental_aggregate_delta(spark, table, spec, store, "dj", 1)
     assert n1 == 1

@@ -123,18 +123,18 @@ def test_guards():
 
 
 def test_spark_spec_matches_local(spark):
-    """mg_over_strings through the tree-merge dataflow equals a single
+    """A Misra-Gries "strings" spec through the tree-merge dataflow equals a single
     local build over the same rows (order-insensitive by the algebra
     only up to trims — so use k large enough that nothing trims and
     counts are EXACT, then a small-k build to exercise the trim path's
     bound)."""
     rows = [(f"w{i % 50}",) for i in range(2_000)]
     df = spark.createDataFrame(rows, "w string").repartition(8)
-    exact = agg.aggregate_sketch(df, agg.mg_over_strings("w", k=64))
+    exact = agg.aggregate_sketch(df, agg.sketch_spec(MisraGries, "w", "strings", k=64))
     assert exact.n == 2_000
     assert exact.error_bound() == 0
     est = exact.estimate_strings(pd.Series([f"w{i}" for i in range(50)]))
     assert est.tolist() == [40] * 50
-    trimmed = agg.aggregate_sketch(df, agg.mg_over_strings("w", k=8))
+    trimmed = agg.aggregate_sketch(df, agg.sketch_spec(MisraGries, "w", "strings", k=8))
     est2 = trimmed.estimate_strings(pd.Series(["w0"]))
     assert 40 - trimmed.error_bound() <= est2[0] <= 40

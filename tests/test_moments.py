@@ -95,7 +95,7 @@ def test_spark_spec_grouped_rank_accuracy(spark, sf_dir):
     tokens = load_tokens(spark, sf_dir).select(
         "source", F.col("n_tok").cast("double").alias("v"))
     grouped = agg.grouped_sketch(
-        tokens, "source", agg.moments_over_column("v", 0.0, 1024.0))
+        tokens, "source", agg.sketch_spec(MomentsSketch, "v", "floats", 0.0, 1024.0))
     pdf = tokens.toPandas()
     for r in grouped.collect():
         sk = sketch_from_bytes(r["sketch"])

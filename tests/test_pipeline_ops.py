@@ -1311,3 +1311,46 @@ def test_winsorize_clips_at_exact_histogram_quantiles(spark):
     assert clipped[100] == 9 and clipped[5] == 5 and clipped[1] == 1
     with _pytest.raises(ValueError):
         winsorize(df, "v", lo=0.9, hi=0.1)
+
+
+_NULL_ROWS = [("1", "s", 10), ("2", "s", None), ("3", "s", 20), ("4", None, 5),
+              ("5", None, 7), ("6", None, None), ("7", "t", None)]
+
+
+def test_percentile_normalize_keeps_null_rows(spark):
+    """NULL values and NULL keys keep their rows: a NULL value yields a
+    NULL percentile, a NULL key is one group of its own."""
+    from presto_bloomfilter_spark.operators.stats import percentile_normalize
+
+    df = spark.createDataFrame(_NULL_ROWS, "id string, source string, v long")
+    for by in ("source", None):
+        res = percentile_normalize(df, "v", by=by)
+        assert res.columns[:2] == ([by, "v"] if by else ["v", "id"])
+        out = {r["id"]: r["pctl"] for r in res.collect()}
+        assert len(out) == res.count() == df.count()
+        assert out["2"] is None and out["6"] is None and out["7"] is None
+    by_src = {r["id"]: r["pctl"] for r in percentile_normalize(df, "v", by="source").collect()}
+    # counts cover non-NULL values only: s = {10, 20}, NULL key = {5, 7}
+    assert (by_src["1"], by_src["3"], by_src["4"], by_src["5"]) == (0.0, 0.5, 0.0, 0.5)
+    glob = {r["id"]: r["pctl"] for r in percentile_normalize(df, "v").collect()}
+    assert (glob["4"], glob["5"], glob["1"], glob["3"]) == (0.0, 0.25, 0.5, 0.75)
+
+
+def test_winsorize_keeps_null_rows(spark):
+    """NULL values and NULL keys keep their rows: a NULL value yields a
+    NULL clip (never the hi threshold), a NULL key is its own group."""
+    from presto_bloomfilter_spark.operators.stats import winsorize
+
+    df = spark.createDataFrame(_NULL_ROWS, "id string, source string, v long")
+    for by in ("source", None):
+        res = winsorize(df, "v", by=by, lo=0.0, hi=0.5)
+        assert res.columns == ([by, "id", "v"] if by else ["id", "source", "v"]) + ["v_lo", "v_hi", "v_w"]
+        out = {r["id"]: r for r in res.collect()}
+        assert len(out) == res.count() == df.count()
+        assert all(out[i]["v_w"] is None for i in ("2", "6", "7"))
+    out = {r["id"]: r for r in winsorize(df, "v", by="source", lo=0.0, hi=0.5).collect()}
+    # NULL-key group {5, 7}: hi = smallest value reaching ceil(0.5 * 2) = 1 -> 5
+    assert (out["4"]["v_hi"], out["5"]["v_w"]) == (5, 5)
+    assert (out["1"]["v_hi"], out["3"]["v_w"]) == (10, 10)
+    # a key whose every value is NULL has no thresholds
+    assert out["7"]["v_lo"] is None and out["7"]["v_hi"] is None

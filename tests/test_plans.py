@@ -6,6 +6,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from presto_bloomfilter_spark import BloomFilter, HyperLogLog
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators.probe import bloom_semi_join
 from presto_bloomfilter_spark.plans import queries as Q
@@ -41,7 +42,7 @@ def test_sketch_build_scan_prunes_to_spec_columns(spark, sf_dir):
     # plan would swap in InMemoryTableScan and hide the parquet scan
     spark.catalog.clearCache()
     tokens = load_tokens(spark, sf_dir)
-    pruned = tokens.select(*agg.bloom_over_tokens("tokens").columns)
+    pruned = tokens.select(*agg.sketch_spec(BloomFilter, "tokens", "tokens").columns)
     plan = _plan(pruned)
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m is not None
@@ -77,7 +78,7 @@ def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir):
     token rows: the exchange has to sit ABOVE the partial-build python
     node, not between scan and python."""
     tokens = load_tokens(spark, sf_dir)
-    out = agg.grouped_sketch(tokens, "source", agg.hll_over_tokens("tokens"))
+    out = agg.grouped_sketch(tokens, "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens"))
     plan = _plan(out)
     # tree shape: Scan → MapInArrow(partial build) → Exchange → merge;
     # the exchange must sit ABOVE the python partial-build node

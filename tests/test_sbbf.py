@@ -108,14 +108,15 @@ def test_aggregate_and_semijoin_in_spark(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     keys = orders.filter("o_totalprice > 100000").select("o_orderkey")
-    sk = agg.aggregate_sketch(keys, agg.sbbf_over_ints("o_orderkey", n=50_000, p=0.001))
+    sk = agg.aggregate_sketch(
+        keys, agg.sketch_spec(SplitBlockBloomFilter, "o_orderkey", "ints", 50_000, 0.001))
     assert type(sk) is SplitBlockBloomFilter
     hits = filter_by_sketch(spark, lineitem, "l_orderkey", sk, ints=True)
     exact = lineitem.join(keys.withColumnRenamed("o_orderkey", "l_orderkey")
                           .distinct(), "l_orderkey", "left_semi")
     assert hits.count() >= exact.count()  # no false negatives
     got = bloom_semi_join(spark, lineitem, "l_orderkey", keys, "o_orderkey",
-                          expected_insertions=50_000, fpp=0.001, kind="sbbf")
+                          50_000, 0.001, kind="sbbf")
     assert got.count() == exact.count()
     with pytest.raises(ValueError, match="unknown sketch kind"):
         bloom_semi_join(spark, lineitem, "l_orderkey", keys, "o_orderkey",
@@ -127,6 +128,6 @@ def test_sbbf_tokens_spec_matches_strings_of_same_ids(spark, sf_dir):
     from presto_bloomfilter_spark.sources.corpus import load_tokens
 
     tokens = load_tokens(spark, sf_dir)
-    sk = agg.aggregate_sketch(tokens.limit(200), agg.sbbf_over_tokens("tokens"))
+    sk = agg.aggregate_sketch(tokens.limit(200), agg.sketch_spec(SplitBlockBloomFilter, "tokens", "tokens"))
     flat = [t for r in tokens.limit(200).collect() for t in r.tokens]
     assert sk.might_contain_ints(np.array(sorted(set(flat)))).all()

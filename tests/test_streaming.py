@@ -4,6 +4,7 @@ idempotent micro-batch folding, replay safety."""
 import numpy as np
 import pytest
 
+from presto_bloomfilter_spark import CountMinSketch, HyperLogLog
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.sources.corpus import generate_tokens_table
 from presto_bloomfilter_spark.store import SketchStore
@@ -31,7 +32,7 @@ def test_stream_folds_all_files(spark, tmp_path):
         spark,
         indir,
         "doc_id string, tokens array<int>, n_tok int, source string",
-        agg.hll_over_strings("doc_id"),
+        agg.sketch_spec(HyperLogLog, "doc_id", "strings"),
         store,
         "stream1",
         str(tmp_path / "ckpt"),
@@ -43,7 +44,7 @@ def test_stream_folds_all_files(spark, tmp_path):
 
 def test_replayed_batch_is_skipped(spark, tmp_path):
     store = SketchStore(str(tmp_path / "store"))
-    spec = agg.cms_over_strings("doc_id", eps=0.01)
+    spec = agg.sketch_spec(CountMinSketch, "doc_id", "strings", eps=0.01)
     sink = StreamingSketchSink(spec, store, "jobR")
     df = spark.createDataFrame([("a",), ("b",)], "doc_id string")
     sink(df, epoch_id=0)
@@ -99,7 +100,7 @@ def test_windowed_stateful_sketch_stream(spark, tmp_path):
         spark,
         indir,
         "ts timestamp, user_id long",
-        agg.hll_over_strings("user_id"),
+        agg.sketch_spec(HyperLogLog, "user_id", "strings"),
         time_col="ts",
         window_duration="10 minutes",
         watermark_delay="10 minutes",
@@ -460,7 +461,7 @@ def test_windowed_stream_non_utc_session_timezone(spark, tmp_path):
             spark,
             indir,
             "ts timestamp, user_id long",
-            agg.hll_over_strings("user_id"),
+            agg.sketch_spec(HyperLogLog, "user_id", "strings"),
             time_col="ts",
             window_duration="10 minutes",
             watermark_delay="10 minutes",

@@ -52,6 +52,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from presto_bloomfilter_spark import (
+        BloomFilter, CountMinSketch, CountSketch, DDSketch, HyperLogLog, KLLSketch, TDigest)
     from presto_bloomfilter_spark.operators import aggregate as agg
     from presto_bloomfilter_spark.operators.probe import contains_udf
     from presto_bloomfilter_spark.sources.corpus import load_tokens
@@ -82,7 +84,7 @@ def main() -> None:
     # restarted job resumes from the manifest (per-partition lineage)
     t0 = time.time()
     bloom, built_parts = checkpointed_aggregate(
-        spark, tokens, agg.bloom_over_tokens("tokens", args.bloom_n, args.fpp),
+        spark, tokens, agg.sketch_spec(BloomFilter, "tokens", "tokens", args.bloom_n, args.fpp),
         store, f"{args.job_id}.bloom",
     )
     store.put(f"{args.job_id}.bloom", bloom)
@@ -102,7 +104,7 @@ def main() -> None:
 
     # 2. per-token frequency CMS
     t0 = time.time()
-    cms = agg.aggregate_sketch(tokens, agg.cms_over_tokens("tokens", eps=1e-4),
+    cms = agg.aggregate_sketch(tokens, agg.sketch_spec(CountMinSketch, "tokens", "tokens", eps=1e-4),
                                target_partials=args.cpus)
     store.put(f"{args.job_id}.cms", cms)
     dt = time.time() - t0
@@ -111,8 +113,10 @@ def main() -> None:
 
     # 3. distinct doc_id / tokens by source (grouped HLL, map-side partials)
     t0 = time.time()
-    per_src_docs = agg.grouped_sketch(tokens, "source", agg.hll_over_strings("doc_id")).collect()
-    per_src_toks = agg.grouped_sketch(tokens, "source", agg.hll_over_tokens("tokens")).collect()
+    per_src_docs = agg.grouped_sketch(
+        tokens, "source", agg.sketch_spec(HyperLogLog, "doc_id", "strings")).collect()
+    per_src_toks = agg.grouped_sketch(
+        tokens, "source", agg.sketch_spec(HyperLogLog, "tokens", "tokens")).collect()
     from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
 
     hll_out = {}
@@ -125,7 +129,8 @@ def main() -> None:
 
     # 4. n_tok quantiles: global + per source KLL
     t0 = time.time()
-    kll = agg.aggregate_sketch(tokens, agg.kll_over_column("n_tok"), target_partials=args.cpus)
+    kll = agg.aggregate_sketch(tokens, agg.sketch_spec(KLLSketch, "n_tok", "floats"),
+                               target_partials=args.cpus)
     store.put(f"{args.job_id}.kll", kll)
     qs = kll.quantile([0.5, 0.9, 0.99])
     metrics["kll_ntok"] = {
@@ -151,7 +156,7 @@ def main() -> None:
         "bloom_fill": round(fam.parts[0].fill_ratio, 5),
     }
     t0 = time.time()
-    td = agg.aggregate_sketch(tokens, agg.tdigest_over_column("n_tok"), target_partials=args.cpus)
+    td = agg.aggregate_sketch(tokens, agg.sketch_spec(TDigest, "n_tok", "floats"), target_partials=args.cpus)
     store.put(f"{args.job_id}.tdigest", td)
     metrics["tdigest_ntok"] = {
         "sec": round(time.time() - t0, 3),
@@ -161,7 +166,7 @@ def main() -> None:
     # 6. round-5 families: DDSketch relative-error quantiles (lossless
     # merge), Count-Sketch F2 (self-join size of the doc_id stream)
     t0 = time.time()
-    dd = agg.aggregate_sketch(tokens, agg.ddsketch_over_column("n_tok"),
+    dd = agg.aggregate_sketch(tokens, agg.sketch_spec(DDSketch, "n_tok", "floats"),
                               target_partials=args.cpus)
     store.put(f"{args.job_id}.ddsketch", dd)
     metrics["ddsketch_ntok"] = {
@@ -171,7 +176,7 @@ def main() -> None:
     }
     t0 = time.time()
     csk = agg.aggregate_sketch(tokens.select("doc_id"),
-                               agg.countsketch_over_strings("doc_id"),
+                               agg.sketch_spec(CountSketch, "doc_id", "strings"),
                                target_partials=args.cpus)
     store.put(f"{args.job_id}.countsketch", csk)
     metrics["countsketch_docid_f2"] = {
