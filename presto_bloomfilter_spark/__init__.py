@@ -23,6 +23,10 @@ library:
 No JVM code, no custom Catalyst rules, no per-row Python in hot paths.
 """
 
+from presto_bloomfilter_spark._worker import install_zip_guard
+
+install_zip_guard()  # no-op outside a Spark task; see _worker.py
+
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
 from presto_bloomfilter_spark.functions.sbbf import SplitBlockBloomFilter
 from presto_bloomfilter_spark.functions.cbf import CountingBloomFilter

@@ -553,6 +553,35 @@ def minhash_near_dup_pairs(
 # ---- exact n-gram Jaccard (set-similarity join, pure Catalyst) ----------------
 
 
+def _gram_sets(df: DataFrame, text_col: str, id_col: str, n: int,
+               max_gram_docs: int | None) -> tuple[DataFrame, DataFrame]:
+    """Per-doc distinct word-n-gram sets of the set-similarity joins:
+    (id, sz) set sizes and exploded (id, g) rows.  ``max_gram_docs``
+    drops (id, g) rows of grams in more than that many docs; the
+    per-gram doc count is a ``groupBy("g").count()`` (map-side partial
+    counts, so a stop-gram in every doc is one row per map task, not one
+    window partition buffering all its rows) and the drop an anti join
+    against those stop-grams, which Spark broadcasts when they are few."""
+    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    grams = F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - n),
+            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", words)))
+    sets = df.select(
+        F.col(id_col).cast("string").alias("id"),
+        F.array_distinct(grams).alias("grams"),
+    )
+    sizes = sets.select("id", F.size("grams").alias("sz"))
+    tokens = sets.select("id", F.explode("grams").alias("g"))
+    if max_gram_docs is not None:
+        stop = tokens.groupBy("g").count().filter(F.col("count") > max_gram_docs)
+        tokens = tokens.join(stop.select("g"), "g", "left_anti").select("id", "g")
+    return sizes, tokens
+
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                         threshold: float = 0.5, n: int = 3,
                         max_gram_docs: int | None = None) -> DataFrame:
@@ -575,27 +604,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     whitespace, no empty words — Python ``str.split()`` semantics), so
     this Jaccard is the same similarity verify_pairs_exact computes.
     """
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    sets = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.array_distinct(grams).alias("grams"),
-    )
-    sizes = sets.select("id", F.size("grams").alias("sz"))
-    tokens = sets.select("id", F.explode("grams").alias("g"))
-    if max_gram_docs is not None:
-        w = Window.partitionBy("g")
-        tokens = (
-            tokens.withColumn("__df", F.count(F.lit(1)).over(w))
-            .filter(F.col("__df") <= max_gram_docs)
-            .drop("__df")
-        )
+    sizes, tokens = _gram_sets(df, text_col, id_col, n, max_gram_docs)
     a, b = tokens.alias("a"), tokens.alias("b")
     co = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
@@ -635,27 +644,7 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     corpus carries no containment signal but quadratic join cost);
     None keeps the result exact, which is what the oracle checks.
     """
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    sets = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.array_distinct(grams).alias("grams"),
-    )
-    sizes = sets.select("id", F.size("grams").alias("sz"))
-    tokens = sets.select("id", F.explode("grams").alias("g"))
-    if max_gram_docs is not None:
-        w = Window.partitionBy("g")
-        tokens = (
-            tokens.withColumn("__df", F.count(F.lit(1)).over(w))
-            .filter(F.col("__df") <= max_gram_docs)
-            .drop("__df")
-        )
+    sizes, tokens = _gram_sets(df, text_col, id_col, n, max_gram_docs)
     a, b = tokens.alias("a"), tokens.alias("b")
     co = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") != F.col("b.id")))

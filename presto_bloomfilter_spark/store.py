@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from presto_bloomfilter_spark.functions import serialization as ser
@@ -45,7 +46,7 @@ class SketchStore:
         .java:38-63: errors surface to the caller for retry)."""
         blob = sketch.to_bytes() if hasattr(sketch, "to_bytes") else bytes(sketch)
         ser.read_kind(blob)  # validate before write
-        tmp = self._path(key) + f".tmp.{os.getpid()}"
+        tmp = self._path(key) + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "wb") as f:
             f.write(blob)
         os.replace(tmp, self._path(key))
@@ -75,7 +76,7 @@ class SketchStore:
         """Persist raw metadata bytes (e.g. a sharded-family manifest)
         next to the sketches — no PBFS validation, atomic overwrite."""
         path = os.path.join(self.root, _safe_key(key) + ".json")
-        tmp = path + f".tmp.{os.getpid()}"
+        tmp = path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "wb") as f:
             f.write(bytes(blob))
         os.replace(tmp, path)
@@ -119,21 +120,22 @@ class SketchStore:
         if not keys:
             raise ValueError("no keys")
         store = self  # picklable (just the root path); shipped to tasks
+        keys = sorted(keys)
         n_tasks = max(1, -(-len(keys) // fan_in))
-        kdf = spark.createDataFrame(
-            [(k,) for k in sorted(keys)], "key string").repartition(n_tasks)
 
         def load_and_merge(batches):
             sk = None
             for b in batches:
-                for k in b.column(0).to_pylist():
-                    other = ser.sketch_from_bytes(store.get_bytes(k))
-                    sk = other if sk is None else sk.merge(other)
+                for sid in b.column(0).to_pylist():
+                    for k in keys[sid::n_tasks]:
+                        other = ser.sketch_from_bytes(store.get_bytes(k))
+                        sk = other if sk is None else sk.merge(other)
             if sk is not None:
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
 
-        partials = kdf.mapInArrow(load_and_merge, "sketch binary")
+        # one task per shard id, as _parquet_shards: no key shuffle stage
+        partials = spark.range(0, n_tasks, 1, n_tasks).mapInArrow(load_and_merge, "sketch binary")
         return _tree_merge_collect(partials, n_tasks, fan_in)
 
 
@@ -240,7 +242,7 @@ class CheckpointedBuild:
             self._flush()
 
     def _flush(self) -> None:
-        tmp = self.manifest_path + f".tmp.{os.getpid()}"
+        tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             f.write(self.manifest.to_json())
         os.replace(tmp, self.manifest_path)
@@ -554,7 +556,7 @@ class IncrementalGroupedBuild:
             self.key, self.snapshot = "", ""
 
     def _flush(self) -> None:
-        tmp = self.manifest_path + f".tmp.{os.getpid()}"
+        tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump({"job_id": self.job_id, "files": self.files,
                        "deltas": self.deltas, "next_delta": self.next_delta,

@@ -1278,6 +1278,24 @@ def test_ngram_containment_max_gram_docs_drops_stop_grams(spark):
     assert ("c", "d") not in filtered
 
 
+def test_ngram_pairs_stop_gram_filter_has_no_window_on_gram(spark):
+    """The max_gram_docs filter counts docs per gram with map-side
+    partial counts, never a window partitioned on the gram (one hot
+    stop-gram would be one window partition holding all its rows)."""
+    from presto_bloomfilter_spark.operators.dedup import (
+        ngram_containment_pairs, ngram_jaccard_pairs)
+
+    rows = [("a", "the quick brown fox one"), ("b", "the quick brown fox one"),
+            ("c", "the quick brown cat two")]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    for pairs in (ngram_jaccard_pairs, ngram_containment_pairs):
+        out = pairs(df, threshold=0.5, max_gram_docs=2)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, plan
+        assert "partial_count" in plan, plan
+        assert {(r["id_a"], r["id_b"]) for r in out.collect()} >= {("a", "b")}
+
+
 def test_percentile_normalize_strictly_less_with_ties(spark):
     from presto_bloomfilter_spark.operators.stats import percentile_normalize
 

@@ -2,6 +2,8 @@
 reference persist-service: PUT/GET round trip, merge-of-loaded,
 resumable partial builds)."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -36,6 +38,60 @@ def test_load_merged(tmp_path):
     store.put("p2", BloomFilter(1000, 0.01).add("two"))
     merged = store.load_merged(["p1", "p2"])
     assert merged.might_contain("one") and merged.might_contain("two")
+
+
+def test_concurrent_puts_of_one_key_publish_a_whole_blob(tmp_path):
+    """Two threads of one process put the same key at once; each writes
+    its own temp file, so the published blob is one of the two whole
+    blobs and neither publish fails."""
+    import threading
+
+    store = SketchStore(str(tmp_path))
+    blobs = [BloomFilter(200_000, 0.01).add(w).to_bytes() for w in ("left", "right")]
+    for _ in range(20):
+        gate, errors = threading.Barrier(2), []
+
+        def put(blob):
+            gate.wait()
+            try:
+                store.put("k", blob)
+            except Exception as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=put, args=(b,)) for b in blobs]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert errors == []
+        assert store.get_bytes("k") in blobs
+        assert store.get("k").to_bytes() in blobs
+    assert store.keys() == ["k"]
+    assert sorted(os.listdir(tmp_path)) == ["k.sketch"]
+
+
+def test_load_merged_distributed_is_one_stage_and_equals_load_merged(spark, tmp_path, monkeypatch):
+    """Each task loads its strided share of the sorted keys by shard id,
+    so the load stage has no key shuffle, and the merged bytes equal the
+    driver-side sequential merge."""
+    store = SketchStore(str(tmp_path))
+    keys = [f"p{i:02d}" for i in range(20)]
+    for i, k in enumerate(keys):
+        store.put(k, BloomFilter(5000, 0.01).add_ints(np.arange(i * 100, i * 100 + 150)))
+
+    loads = []
+    real_tree_merge = agg._tree_merge_collect
+
+    def capture(partials, *args, **kwargs):
+        loads.append(partials._jdf.queryExecution().executedPlan().toString())
+        return real_tree_merge(partials, *args, **kwargs)
+
+    monkeypatch.setattr(agg, "_tree_merge_collect", capture)
+    want = store.load_merged(keys).to_bytes()
+    for fan_in in (4, 16):  # with and without a tree-merge level
+        assert store.load_merged_distributed(spark, keys[::-1], fan_in).to_bytes() == want
+    assert len(loads) == 2
+    assert not any("Exchange" in plan for plan in loads), loads
 
 
 def test_invalid_keys_and_garbage(tmp_path):
